@@ -64,7 +64,8 @@ object Tables {
 /** One place to build correctly-configured sessions (UTC, AQE, ns-long),
   * with the engine's native expressions (graft_dot / graft_cosine / …)
   * and the range-join optimizer rule injected via
-  * SparkSessionExtensions. */
+  * SparkSessionExtensions, and the engine's `file:` filesystem
+  * ([[graft.core.LocalFs]]) under both Hadoop APIs. */
 object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -82,4 +83,8 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.core.LocalFs.FileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.core.LocalFs.Context].getName)
 }

@@ -96,6 +96,13 @@ case class SegKeys(child: Expression, tau: Int,
     bounds: Map[Int, IndexedSeq[Int]])
     extends UnaryExpression with ImplicitCastInputTypes {
   require(tau >= 1, s"tau must be >= 1, got $tau")
+  // malformed boundary meta fails here, on the driver, not as an
+  // IndexOutOfBoundsException inside an executor's kernel loop
+  bounds.foreach { case (len, starts) =>
+    require(starts.length >= tau + 1,
+      s"graft_seg_keys bounds entry for length $len has ${starts.length} " +
+        s"segment starts (${starts.mkString(",")}); tau = $tau needs ${tau + 1}")
+  }
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StructType(Seq(

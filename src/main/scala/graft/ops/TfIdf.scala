@@ -531,7 +531,7 @@ object TfIdf {
           .localCheckpoint(true)
         Bucketing.appendTable(retract, tableName + "_stats")
     }
-    Bucketing.tombstoneAppend(del, "doc_id", tableName, atSeq = seq)
+    Bucketing.tombstoneAppendMaterialized(del, "doc_id", tableName, seq)
   }
 
   /** Fold tombstones into the posting base and the `_docs` side table
@@ -808,10 +808,6 @@ object TfIdf {
     Bucketing.writeBucketed(Bucketing.withGen(tg, 0L),
       tableName, "tg", tableBuckets)
   }
-
-  private def trigramPostings(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    trigramPostings(docs, idCol, textCol, buckets = 0)
 
   /** `buckets > 0` re-clusters the exploded postings by the bucket key
     * before a bucketed write: the r18 fanOut multiplied output files to

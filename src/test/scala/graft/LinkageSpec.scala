@@ -488,4 +488,16 @@ class LinkageSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_seg_keys"), p.take(800))
   }
+
+  test("graft_seg_keys: a bounds entry with fewer than τ+1 starts fails on the driver, naming the entry") {
+    val d = Seq((1L, "Customer#000000123")).toDF("d_id", "d_s")
+    // τ = 2 needs 3 starts per length; the 18-char entry has 2
+    val bad: Map[Int, Seq[Int]] = Map(12 -> Seq(1, 5, 9), 18 -> Seq(1, 7))
+    val e = intercept[Exception](Linkage.dirtySegKeys(d, 2, bad))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("length 18") && m.contains("2 segment starts")),
+      msgs.mkString(" | "))
+    assert(!msgs.exists(_.contains("IndexOutOfBounds")), msgs.mkString(" | "))
+  }
 }
