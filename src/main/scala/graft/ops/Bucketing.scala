@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Bucketed-layout co-located joins — the 100 TB answer to "this join
   * shuffles the fact table every single run".
@@ -333,6 +334,23 @@ object Bucketing {
   // delete), so the live view holds exactly the post-delete state — a
   // latest-op-wins key log would resurrect them alongside the fresh
   // row (r15 ADVICE).
+  //
+  // ONE READ PER BATCH CALL, A TABLE-BACKED VIEW PER STREAM: a batch
+  // BM25 or IVFADC call (probe, append, delete, compact) reads `_del`
+  // — and BM25's `_stats` — ONCE on the driver ([[readLifecycle]]) and
+  // plans the rest of the call against that read: tombstones become a
+  // broadcast local side ([[liveViewAt]], no join at all when nothing is
+  // deleted), the generation and corpus sums become literals. Each
+  // per-use aggregate of the same fact would be a Spark job of its own,
+  // and on sub-second calls per-job coordination, not compute, is the
+  // latency. Streaming constructors (`TfIdf.searchScoreStream`,
+  // `Similarity.ivfPqMatchStream`, the Dedup and Linkage streams) keep
+  // the table-backed [[liveView]]: its `_del` scan re-resolves per
+  // micro-batch, so a delete that lands after the stream started still
+  // suppresses rows (within the refresh envelope above), where a
+  // driver-side read taken when the stream was defined would freeze its
+  // tombstones for the stream's life. The two are one liveness rule
+  // over two sources, not two paths for the same job.
 
   /** The generation column stamped onto tombstone-capable index rows —
     * see [[withGen]] / [[currentGen]]. [[liveView]] consumes and drops
@@ -393,6 +411,110 @@ object Bucketing {
       .agg(coalesce(max("seq"), lit(0L))).first().getLong(0)
   }
 
+  /** What a BATCH call knows about a tombstoned index's small side
+    * tables, from ONE driver read ([[readLifecycle]]): the generation
+    * (latest `_del` sequence, 0 when nothing was ever deleted), the
+    * per-key latest delete sequence, and — for an index with an additive
+    * `<table>_stats` log (BM25) — the (seq, del_sig) bookkeeping log and
+    * the summed corpus stats. `keyField` is the `_del` key column, the
+    * schema of any tombstone rows the call builds locally. */
+  final case class Lifecycle(gen: Long, tombstones: Map[Any, Long],
+      keyField: StructField, book: Array[(Long, Long)], nDocs: Long,
+      totalDl: Long)
+
+  /** Read `<table>_del` (and, with `withStats`, `<table>_stats`) once,
+    * as ONE single-stage job with no aggregate — a union of the raw rows
+    * collected to the driver, where the generation, tombstone map,
+    * bookkeeping log and corpus sums are derived (see "one read per
+    * batch call" above). The corpus sums use `Math.addExact`, so an
+    * overflow throws as an ANSI `sum` would. Both tables are small by
+    * contract (fold `_del` with [[tombstoneCompact]]; `_stats` holds one
+    * row per lifecycle op). */
+  def readLifecycle(spark: SparkSession, tableName: String,
+      withStats: Boolean): Lifecycle = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val delT = tableName + "_del"
+    val del = if (spark.catalog.tableExists(delT)) Some(spark.table(delT))
+      else None
+    val keyField = del.map(_.schema.head)
+      .getOrElse(StructField("key", LongType))
+    val nul = lit(null).cast(LongType)
+    // one row shape for both sources: (_src, key, seq, n_docs,
+    // total_dl, del_sig); union'd scans stay one stage
+    val delRows = del.map(_.select(lit(0).as("_src"),
+      col(keyField.name).as("_k"), col("seq"), nul.as("_n"), nul.as("_t"),
+      nul.as("_s")))
+    val statsRows = if (!withStats) None else {
+      val st = spark.table(tableName + "_stats")
+      // a `_stats` table persisted before the bookkeeping columns holds
+      // additive rows only (seq = del_sig = 0, see TfIdf.ensureStatsSchema)
+      def orZero(c: String) =
+        if (st.columns.contains(c)) col(c).cast(LongType) else lit(0L)
+      Some(st.select(lit(1).as("_src"),
+        lit(null).cast(keyField.dataType).as("_k"), orZero("seq").as("seq"),
+        col("n_docs").cast(LongType).as("_n"),
+        col("total_dl").cast(LongType).as("_t"), orZero("del_sig").as("_s")))
+    }
+    val rows = (delRows.toSeq ++ statsRows).reduceOption(_.unionByName(_))
+      .map(_.collect()).getOrElse(Array.empty[Row])
+    var gen = 0L
+    var nDocs = 0L
+    var totalDl = 0L
+    val tomb = scala.collection.mutable.HashMap.empty[Any, Long]
+    val book = Array.newBuilder[(Long, Long)]
+    rows.foreach { r =>
+      val seq = r.getLong(2)
+      if (r.getInt(0) == 0) {
+        gen = math.max(gen, seq)
+        val k = r.get(1)
+        if (tomb.get(k).forall(_ < seq)) tomb(k) = seq
+      } else {
+        book += ((seq, r.getLong(5)))
+        // a NULL sum input is skipped, as SQL sum skips it
+        if (!r.isNullAt(3)) nDocs = Math.addExact(nDocs, r.getLong(3))
+        if (!r.isNullAt(4)) totalDl = Math.addExact(totalDl, r.getLong(4))
+      }
+    }
+    Lifecycle(gen, tomb.toMap, keyField, book.result(), nDocs, totalDl)
+  }
+
+  /** [[liveViewOf]] against the tombstones of one [[readLifecycle]] read:
+    * the same liveness rule and observed gauge, with the delete side a
+    * broadcast LOCAL relation (explicit `Row` + `StructType`, no encoder
+    * derivation on the serving path) — no `_del` scan or aggregate at
+    * execution — and no join at all when the index has no tombstones.
+    * For BATCH calls only: a streaming query must keep the table-backed
+    * [[liveView]], whose `_del` scan re-resolves per micro-batch, or it
+    * would never see a delete issued after it started. */
+  def liveViewAt(base: DataFrame, lc: Lifecycle, keyCol: String): DataFrame =
+    if (lc.tombstones.isEmpty) base.drop(GenCol)
+    else {
+      val rows = new java.util.ArrayList[Row](lc.tombstones.size)
+      lc.tombstones.foreach { case (k, s) => rows.add(Row(k, s)) }
+      suppressDeleted(base, base.sparkSession.createDataFrame(rows,
+        StructType(Seq(lc.keyField.copy(name = keyCol),
+          StructField("_del_seq", LongType, nullable = false)))), keyCol)
+    }
+
+  /** The liveness rule shared by [[liveViewOf]] and [[liveViewAt]]:
+    * `del` holds one (key, `_del_seq`) row per tombstoned key; it gets
+    * the [[TombstoneMetricPrefix]] gauge and is broadcast-left-joined,
+    * and a base row survives iff its generation is at least its key's
+    * latest delete sequence. */
+  private def suppressDeleted(base: DataFrame, del: DataFrame,
+      keyCol: String): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+    val spark = base.sparkSession
+    val observed = del.observe(
+      TombstoneMetricPrefix + tombObsId.incrementAndGet(),
+      count(lit(1)).as("n_tombstoned_keys"),
+      (count(lit(1)) >= compactThreshold(spark)).as("compact_advised"))
+    val gen = if (base.columns.contains(GenCol)) col(GenCol) else lit(0L)
+    base.join(broadcast(observed), Seq(keyCol), "left")
+      .filter(col("_del_seq").isNull || gen >= col("_del_seq"))
+      .drop("_del_seq").drop(GenCol)
+  }
+
   /** Create an EMPTY tombstone table alongside a fresh index build.
     * Always materializing it (rather than creating lazily on the first
     * delete) is load-bearing for STREAMING probes: a stream plans the
@@ -434,42 +556,41 @@ object Bucketing {
     * Within-batch duplicates are collapsed; re-deleting an
     * already-tombstoned key appends one fresh (key, seq) row — the
     * delete table stays delete-volume-sized and [[liveView]] folds to
-    * one broadcast key either way.
-    *
-    * `atSeq` (optional) lets a delete with MORE THAN ONE side effect
-    * pre-claim its sequence via [[currentGen]]+1 and stamp every side
-    * table with it before the tombstones land — the retry-detection
-    * handle for multi-table deletes (see
-    * [[graft.ops.TfIdf.searchIndexDelete]]: the stats retraction row
-    * carries the seq, so a retry after a partial failure can tell an
-    * already-applied retraction from a missing one). */
+    * one broadcast key either way. */
   def tombstoneAppend(delKeys: DataFrame, keyCol: String,
-      tableName: String, atSeq: Long = -1L): Unit =
-    appendTombstones(delKeys, keyCol, tableName, atSeq, materialized = false)
-
-  /** [[tombstoneAppend]] of a key set the caller has already made
-    * distinct and materialized (BM25's delete checkpoints its id set to
-    * measure the retraction first): no second distinct and
-    * `localCheckpoint`, two Spark jobs fewer. */
-  private[ops] def tombstoneAppendMaterialized(keys: DataFrame,
-      keyCol: String, tableName: String, atSeq: Long): Unit =
-    appendTombstones(keys, keyCol, tableName, atSeq, materialized = true)
-
-  private def appendTombstones(delKeys: DataFrame, keyCol: String,
-      tableName: String, atSeq: Long, materialized: Boolean): Unit = {
+      tableName: String): Unit = {
     import org.apache.spark.sql.functions.lit
     val spark = delKeys.sparkSession
     assertNoPendingCompact(spark, tableName, "tombstoneAppend")
-    val seq = if (atSeq > 0L) atSeq else currentGen(spark, tableName) + 1L
-    val keys = delKeys.select(keyCol)
+    val seq = currentGen(spark, tableName) + 1L
     // eager: the caller may derive the delete set from the index itself
-    val del =
-      if (materialized) keys.withColumn("seq", lit(seq))
-      else keys.distinct().withColumn("seq", lit(seq)).localCheckpoint(true)
-    if (spark.catalog.tableExists(tableName + "_del"))
+    writeTombstones(delKeys.select(keyCol).distinct()
+      .withColumn("seq", lit(seq)).localCheckpoint(true), tableName)
+  }
+
+  /** [[tombstoneAppend]] of a DISTINCT key set the caller already holds
+    * on the driver, at a sequence the caller pre-claimed (generation + 1)
+    * and stamped on its other side tables before the tombstones land —
+    * the retry-detection handle of a multi-table delete
+    * ([[graft.ops.TfIdf.searchIndexDelete]]: the stats retraction row
+    * carries the seq, so a retry after a partial failure can tell an
+    * applied retraction from a missing one). The rows are written from a
+    * local relation of `keyField`-typed keys: no distinct, no
+    * checkpoint. */
+  private[ops] def tombstoneAppendKeys(spark: SparkSession,
+      keys: Iterable[Any], keyField: StructField, tableName: String,
+      seq: Long): Unit = {
+    assertNoPendingCompact(spark, tableName, "tombstoneAppend")
+    val rows = new java.util.ArrayList[Row]()
+    keys.foreach(k => rows.add(Row(k, seq)))
+    writeTombstones(spark.createDataFrame(rows, StructType(Seq(keyField,
+      StructField("seq", LongType, nullable = false)))), tableName)
+  }
+
+  private def writeTombstones(del: DataFrame, tableName: String): Unit =
+    if (del.sparkSession.catalog.tableExists(tableName + "_del"))
       appendTable(del, tableName + "_del")
     else writeTable(del, tableName + "_del")
-  }
 
   /** The LIVE rows of a tombstoned index: base rows whose generation is
     * at least their key's latest delete sequence (rows of never-deleted
@@ -492,19 +613,10 @@ object Bucketing {
     * same tombstones. */
   def liveViewOf(base: DataFrame, spark: SparkSession, delTable: String,
       keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.max
     if (!spark.catalog.tableExists(delTable)) base.drop(GenCol)
-    else {
-      val del = spark.table(delTable)
-        .groupBy(keyCol).agg(max("seq").as("_del_seq"))
-        .observe(TombstoneMetricPrefix + tombObsId.incrementAndGet(),
-          count(lit(1)).as("n_tombstoned_keys"),
-          (count(lit(1)) >= compactThreshold(spark)).as("compact_advised"))
-      val gen = if (base.columns.contains(GenCol)) col(GenCol) else lit(0L)
-      base.join(broadcast(del), Seq(keyCol), "left")
-        .filter(col("_del_seq").isNull || gen >= col("_del_seq"))
-        .drop("_del_seq").drop(GenCol)
-    }
+    else suppressDeleted(base, spark.table(delTable)
+      .groupBy(keyCol).agg(max("seq").as("_del_seq")), keyCol)
   }
 
   /** Fold tombstones into the base: rewrite the index to its live rows

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Similarity search over embedding columns (`array<float>`)
   * (SURVEY.md §2.3 north-star "Near-dup / similarity" row).
@@ -329,10 +331,25 @@ object Similarity {
     val dim = codebooks.map(_.head.length).sum
     val sub = dim / m
     call_function("graft_adc_tables", v,
-      typedLit(codebooks.flatten.flatten.toIndexedSeq),
-      typedLit(codebooks.map(_.length).toIndexedSeq),
+      doublesLit(codebooks.flatten.flatten),
+      intsLit(codebooks.map(_.length)),
       lit(sub), lit(squared))
   }
+
+  /** A flat kernel argument as ONE array literal of an explicit
+    * `ArrayType(_, containsNull = false)` — the type `typedLit` of an
+    * `IndexedSeq[Double]` resolves to, without its per-call Scala
+    * reflection (`ScalaReflection.schemaFor`, about half of the sampled
+    * driver time inside an IVFADC probe call). The kernels read the
+    * literal's elements unchanged, so their inputs stay bit-equal. */
+  private def doublesLit(a: Array[Double]): Column =
+    GraftShims.column(Literal(UnsafeArrayData.fromPrimitiveArray(a),
+      ArrayType(DoubleType, containsNull = false)))
+
+  /** [[doublesLit]] for an int[] kernel argument. */
+  private def intsLit(a: Array[Int]): Column =
+    GraftShims.column(Literal(UnsafeArrayData.fromPrimitiveArray(a),
+      ArrayType(IntegerType, containsNull = false)))
 
   /** The pre-kernel HOF formulation of the ADC tables. Kept as the
     * independent twin the spec pins [[graft.functions.AdcTables]]
@@ -392,8 +409,8 @@ object Similarity {
     // bit-equal to [[coarseProbeCellsHof]], the spec-pinned twin
     call_function("graft_centroid_topk",
       transform(v, _.cast("double")),
-      typedLit(cents.flatten.toIndexedSeq),
-      typedLit(centroidBias(cents, cosine = false).toIndexedSeq),
+      doublesLit(cents.flatten),
+      doublesLit(centroidBias(cents, cosine = false)),
       lit(nprobe))
 
   /** The pre-kernel HOF formulation of the coarse-cell ranking. Kept as
@@ -424,7 +441,7 @@ object Similarity {
     // last zip_with-over-centroid-literal node in the IVFADC plans);
     // bit-equal to [[residualColHof]], the spec-pinned twin
     call_function("graft_residual", transform(vec, _.cast("double")),
-      cellCol.cast("int"), typedLit(cents.flatten.toIndexedSeq),
+      cellCol.cast("int"), doublesLit(cents.flatten),
       lit(cents.length))
 
   /** The pre-kernel HOF formulation of the coarse residual. Kept as the
@@ -442,8 +459,8 @@ object Similarity {
   private def coarseCell(vec: Column, cents: Array[Seq[Double]]): Column =
     call_function("graft_centroid_argmax",
       transform(vec, _.cast("double")),
-      typedLit(cents.flatten.toIndexedSeq),
-      typedLit(centroidBias(cents, cosine = false).toIndexedSeq))
+      doublesLit(cents.flatten),
+      doublesLit(centroidBias(cents, cosine = false)))
 
   /** RESIDUAL IVFADC index build — the canonical (FAISS-style) refinement
     * of [[ivfPqIndexBuild]]: PQ codebooks are trained on, and codes
@@ -498,7 +515,7 @@ object Similarity {
       .withColumn("_tab", adcL2TablesOf(
         residualCol(col("_qv"), col("cell"), coarseCents), codebooks))
       .drop("_qv")
-    val scored = liveIvfPqIndex(spark, tableName)
+    val scored = liveIvfPqBatch(spark, tableName)
       .join(q.hint("shuffle_merge"), "cell")
       .withColumn("dist_adc", adcL2Dist(codebooks.length, "pq_code"))
     val w = Window.partitionBy("q_id")
@@ -557,8 +574,8 @@ object Similarity {
       .select(col(idCol).as("n_id"), col("pq_code"),
         call_function("graft_centroid_argmax",
           transform(col(vecCol), _.cast("double")),
-          typedLit(coarseCents.flatten.toIndexedSeq),
-          typedLit(centroidBias(coarseCents, cosine = false).toIndexedSeq))
+          doublesLit(coarseCents.flatten),
+          doublesLit(centroidBias(coarseCents, cosine = false)))
           .as("cell"))
 
   def ivfPqIndexBuild(corpus: DataFrame, idCol: String, vecCol: String,
@@ -617,7 +634,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("q_id"),
       adcL2Tables(vecCol, codebooks).as("_tab"),
       explode(coarseProbeCells(col(vecCol), coarseCents, nprobe)).as("cell"))
-    val scored = liveIvfPqIndex(spark, tableName)
+    val scored = liveIvfPqBatch(spark, tableName)
       .join(q.hint("shuffle_merge"), "cell")
       .withColumn("dist_adc", adcL2Dist(codebooks.length, "pq_code"))
     val w = Window.partitionBy("q_id")
@@ -626,6 +643,16 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select("q_id", "rnk", "n_id", "dist_adc")
   }
+
+  /** The live code rows for ONE batch probe: tombstones from a single
+    * [[Bucketing.readLifecycle]] read of `_del`, applied as a broadcast
+    * local side — or not at all when nothing is deleted, so an index
+    * without deletes plans no join and no `_del` stage. Streams keep the
+    * table-backed [[liveIvfPqIndex]]. */
+  private def liveIvfPqBatch(spark: SparkSession,
+      tableName: String): DataFrame =
+    Bucketing.liveViewAt(spark.table(tableName),
+      Bucketing.readLifecycle(spark, tableName, withStats = false), "n_id")
 
   /** Append a new corpus batch to an [[ivfPqIndexBuild]] table — encode
     * with the SAME codebooks/centroids, write delta-sized (the
@@ -800,8 +827,8 @@ object Similarity {
       // DedupSimilaritySpec) — the unrolled-SQL oracles are unchanged.
       def assigned: DataFrame =
         normed.withColumn("cluster", call_function("graft_centroid_argmax",
-          col("_nv"), typedLit(cents.flatten.toIndexedSeq),
-          typedLit(centroidBias(cents, cosine).toIndexedSeq)))
+          col("_nv"), doublesLit(cents.flatten),
+          doublesLit(centroidBias(cents, cosine))))
       // Mean update as ONE groupBy(cluster) with dim per-position avg
       // aggregates (r18 optimization): the previous [[centroids]] call
       // posexploded every vector to dim rows and paid a second
@@ -909,8 +936,8 @@ object Similarity {
         val assigns = array((0 until m).map(j => struct(
           lit(j).as("j"),
           call_function("graft_centroid_argmax", col("_subs")(j),
-            typedLit(cents(j).flatten.toIndexedSeq),
-            typedLit(centroidBias(cents(j), cosine = false).toIndexedSeq))
+            doublesLit(cents(j).flatten),
+            doublesLit(centroidBias(cents(j), cosine = false)))
             .as("cluster"),
           col("_subs")(j).as("v"))): _*)
         // one groupBy (j, cluster) with `sub` per-position avg aggregates
@@ -971,8 +998,8 @@ object Similarity {
       val cb = codebooks(j)
       val subV = transform(slice(col(vecCol), j * sub + 1, sub), _.cast("double"))
       call_function("graft_centroid_argmax", subV,
-        typedLit(cb.flatten.toIndexedSeq),
-        typedLit(centroidBias(cb, cosine = false).toIndexedSeq))
+        doublesLit(cb.flatten),
+        doublesLit(centroidBias(cb, cosine = false)))
     }
     df.withColumn("pq_code", array((0 until m).map(code): _*))
   }

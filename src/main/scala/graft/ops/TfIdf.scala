@@ -2,9 +2,11 @@ package graft.ops
 
 import graft.core.Transforms
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Corpus TF-IDF scoring and keyword extraction (SURVEY.md §2.3 "text
   * analysis" north-star row) — the classic relevance / topicality signal a
@@ -204,30 +206,6 @@ object TfIdf {
     * visible so LifecycleRecoverySpec can replay every partial-append
     * state. `failAfter` = persisted steps allowed before the injected
     * crash: 1 = pending marker only, 2 = + postings, 3 = + `_docs`. */
-  /** The lifecycle bookkeeping reads in ONE job (r19, verdict item 5 —
-    * was one tiny job each): `_del`'s max sequence (the current
-    * generation) and the `_stats` (seq, del_sig) log arrive in a single
-    * union'd collect. Values are identical to
-    * [[Bucketing.currentGen]] + a `_stats` collect run back to back —
-    * both are read-only and no write can land between them in the
-    * single-maintainer contract, so every crash-replay path the
-    * LifecycleRecoverySpec matrix pins is unchanged. */
-  private def genAndStatsLog(spark: SparkSession,
-      tableName: String): (Long, Array[(Long, Long)]) = {
-    val stats = spark.table(tableName + "_stats")
-      .select(lit(1).as("_src"), col("seq").as("a"), col("del_sig").as("b"))
-    val rows = (if (spark.catalog.tableExists(tableName + "_del"))
-        spark.table(tableName + "_del")
-          .agg(coalesce(max("seq"), lit(0L)).as("a"))
-          .select(lit(0).as("_src"), col("a"), lit(0L).as("b"))
-          .unionByName(stats)
-      else stats).collect()
-    val gen = rows.find(_.getInt(0) == 0).map(_.getLong(1)).getOrElse(0L)
-    val book = rows.filter(_.getInt(0) == 1)
-      .map(r => (r.getLong(1), r.getLong(2)))
-    (gen, book)
-  }
-
   private[graft] def appendImpl(newDocs: DataFrame, idCol: String,
       textCol: String, tableName: String, tableBuckets: Int,
       failAfter: Int): Unit = {
@@ -237,8 +215,10 @@ object TfIdf {
         s"[graft-test] injected crash after append step $step")
     ensureStatsSchema(spark, tableName)
     assertNoPendingFamilyCompact(spark, tableName, "searchIndexAppend")
-    // generation + bookkeeping log in one job (see [[genAndStatsLog]])
-    val (gen, book) = genAndStatsLog(spark, tableName)
+    // generation + bookkeeping log: the call's one lifecycle read
+    val lc = Bucketing.readLifecycle(spark, tableName, withStats = true)
+    val gen = lc.gen
+    val book = lc.book
     // ONE termCounts pass over the batch (r18 optimization — the batch
     // digest, postings, `_docs`, and `_stats` appends each re-scanned
     // and re-tokenized it before): the per-doc (doc_id, dl, _tc)
@@ -252,17 +232,28 @@ object TfIdf {
         col("_tc"))
       .persist()
     try {
-    // batch identity: count + order-free gen-salted digest (0 remaps to
-    // 1 — 0 is the legacy-additive-row stamp and must stay
-    // unclaimable; collisions are at the xxhash64 level, the same
-    // accepted risk as the delete's digest)
-    val idAgg = perDoc
-      .select(col("doc_id")).distinct()
-      .select(col("doc_id"), xxhash64(col("doc_id"), lit(gen)).as("_h"))
-      .agg(count(lit(1)), coalesce(expr("bit_xor(_h)"), lit(0L)))
+    // batch identity AND the stats row in ONE global aggregate:
+    // distinct-id count + order-free gen-salted digest (0 remaps to 1 —
+    // 0 is the legacy-additive-row stamp and must stay unclaimable;
+    // collisions are at the xxhash64 level, the same accepted risk as
+    // the delete's digest), row count and dl sum. The digest folds the
+    // DISTINCT id set (collect_set + a NULL-id flag: a repeated id
+    // must not XOR itself away), in the final aggregate's projection on
+    // the executor — one shuffle, and the set never reaches the driver
+    def h(id: Column) = xxhash64(id, lit(gen))
+    val batch = perDoc
+      .agg(count(lit(1)).as("_rows"), coalesce(sum("dl"), lit(0L)).as("_dl"),
+        collect_set(col("doc_id")).as("_ids"),
+        coalesce(max(col("doc_id").isNull), lit(false)).as("_null"))
+      .select(
+        (size(col("_ids")) + col("_null").cast("int")).cast("long"),
+        aggregate(col("_ids"),
+          when(col("_null"), h(lit(null).cast("long"))).otherwise(lit(0L)),
+          (acc, id) => acc.bitwiseXOR(h(id))),
+        col("_rows"), col("_dl"))
       .first()
-    if (idAgg.getLong(0) == 0L) return // empty batch: nothing to append
-    val digest = { val d = idAgg.getLong(1); if (d == 0L) 1L else d }
+    if (batch.getLong(0) == 0L) return // empty batch: nothing to append
+    val digest = { val d = batch.getLong(1); if (d == 0L) 1L else d }
     def completedRow(d: Long) = book.exists(p => p._1 == 0L && p._2 == d)
     if (completedRow(digest)) {
       // a finished append's retry: idempotent no-op (clear a marker a
@@ -328,12 +319,8 @@ object TfIdf {
           perDoc.select(col("doc_id"), col("dl")), gen),
         tableName + "_docs")
     hook(3)
-    Bucketing.appendTable(
-      perDoc.agg(count(lit(1)).as("n_docs"),
-        sum("dl").cast("long").as("total_dl"))
-        .select(col("n_docs"), col("total_dl"),
-          lit(0L).as("seq"), lit(digest).as("del_sig")),
-      tableName + "_stats")
+    appendStatsRow(spark, tableName, batch.getLong(2), batch.getLong(3),
+      0L, digest)
     clearAppendMarker(spark, tableName)
     } finally perDoc.unpersist()
   }
@@ -385,6 +372,20 @@ object TfIdf {
     val p = appendMarkerPath(spark, tableName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, false)
+  }
+
+  /** Append one (n_docs, total_dl, seq, del_sig) bookkeeping row to
+    * `<table>_stats` from driver values: a one-row local relation in the
+    * table's own column order, written without a second aggregate. */
+  private def appendStatsRow(spark: SparkSession, tableName: String,
+      nDocs: Long, totalDl: Long, seq: Long, delSig: Long): Unit = {
+    val stats = tableName + "_stats"
+    val v = Map("n_docs" -> nDocs, "total_dl" -> totalDl, "seq" -> seq,
+      "del_sig" -> delSig)
+    val names = spark.table(stats).columns.toSeq
+    Bucketing.appendTable(spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(names.map(v))),
+      StructType(names.map(StructField(_, LongType)))), stats)
   }
 
   /** The pending partial append of `tableName`, if one exists: marker
@@ -465,8 +466,9 @@ object TfIdf {
     * between the two leaves a transient state (stats retracted, docs
     * still ranking) that re-running the same delete converges EXACTLY:
     * the retry sees its (seq, digest) already in `_stats` (the
-    * tombstones never landed, so [[Bucketing.currentGen]] still yields
-    * the same sequence), skips the retraction, and completes the
+    * tombstones never landed, so the generation of the call's
+    * [[Bucketing.readLifecycle]] read is unchanged and yields the same
+    * sequence), skips the retraction, and completes the
     * tombstone append. A DIFFERENT delete issued while a partial one is
     * pending would claim the same sequence — the digest mismatch fails
     * it LOUDLY instead of silently skipping its retraction (the stats
@@ -484,30 +486,34 @@ object TfIdf {
     // not have written yet — deleting its docs now would retract zero
     // while their postings keep ranking, permanently once the append
     // completes
-    // generation + bookkeeping log in one job (see [[genAndStatsLog]])
-    val (gen0, bookkeeping) = genAndStatsLog(spark, tableName)
-    pendingAppend(spark, tableName, bookkeeping).foreach { d =>
+    val lc = Bucketing.readLifecycle(spark, tableName, withStats = true)
+    pendingAppend(spark, tableName, lc.book).foreach { d =>
       throw new IllegalStateException(
         s"$tableName: a prior append left a partial state (pending " +
           s"marker $d without a completed stats row) — retry that " +
           "append to completion before deleting (single-maintainer " +
           "contract, see graft.ops.Bucketing)")
     }
-    val del = delIds.select(col(idCol).cast("long").as("doc_id"))
-      .distinct().localCheckpoint(true)
-    val seq = gen0 + 1L
+    // the distinct id set on the driver: broadcast-small by the same
+    // contract as `_del` itself, which it joins as tombstone rows
+    val ids = delIds.select(col(idCol).cast("long")).collect()
+      .map(_.get(0)).distinct.toSeq
+    val seq = lc.gen + 1L
     // order-free digest of THIS delete's id set: a retraction row is
     // "already applied" only if both its sequence AND its digest match —
     // a bare-seq check would mistake an ABANDONED partial delete's
     // retraction (same next-seq, different ids) for this one's and
     // silently skip the new retraction. XOR of per-id xxhash64: order-
-    // free AND overflow-free (ANSI mode throws on a long-sum overflow,
-    // and hash values span the full 64-bit range); the id set is
-    // distinct, so XOR self-cancellation cannot occur
-    val delSig = del.select(xxhash64(col("doc_id")).as("_h"))
-      .agg(coalesce(expr("bit_xor(_h)"), lit(0L)))
-      .first().getLong(0)
-    val prior = bookkeeping.collectFirst { case (s, d) if s == seq => d }
+    // free AND overflow-free; the id set is distinct, so XOR
+    // self-cancellation cannot occur. Computed with the kernel Spark's
+    // `xxhash64(doc_id)` evaluates (seed 42; a NULL id hashes to the
+    // seed), so a retraction row stamped by a
+    // `bit_xor(xxhash64(doc_id))` aggregate matches on retry.
+    val delSig = ids.foldLeft(0L) { (acc, id) => acc ^ (id match {
+      case l: Long => XXH64.hashLong(l, 42L)
+      case _ => 42L
+    }) }
+    val prior = lc.book.collectFirst { case (s, d) if s == seq => d }
     prior match {
       case Some(sig) if sig == delSig => () // this delete's retry: applied
       case Some(_) => throw new IllegalStateException(
@@ -519,19 +525,31 @@ object TfIdf {
           "see graft.ops.Bucketing)")
       case None =>
         // retraction measured BEFORE the tombstones land (the docs must
-        // still be live); eager so the later _del append cannot shift it
-        val retract = Bucketing.liveViewOf(
-            spark.table(tableName + "_docs"), spark, tableName + "_del",
-            "doc_id")
-          .join(del, "doc_id")
-          .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
-            (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
-          .withColumn("seq", lit(seq))
-          .withColumn("del_sig", lit(delSig))
-          .localCheckpoint(true)
-        Bucketing.appendTable(retract, tableName + "_stats")
+        // still be live): the deleted ids' `_docs` rows, live under the
+        // read's tombstones
+        val keys = ids.collect { case l: Long => l }
+        var n = 0L
+        var dl = 0L
+        if (keys.nonEmpty) {
+          val docs = spark.table(tableName + "_docs")
+          val rowGen =
+            if (docs.columns.contains(Bucketing.GenCol)) col(Bucketing.GenCol)
+            else lit(0L)
+          docs.filter(GraftShims.inSet(col("doc_id"), keys.toSet[Any]))
+            .select(col("doc_id"), col("dl").cast("long"), rowGen)
+            .collect()
+            .filter(r => lc.tombstones.get(r.getLong(0))
+              .forall(r.getLong(2) >= _))
+            .foreach { r =>
+              n += 1L
+              if (!r.isNullAt(1)) dl = Math.addExact(dl, r.getLong(1))
+            }
+        }
+        appendStatsRow(spark, tableName, Math.negateExact(n),
+          Math.negateExact(dl), seq, delSig)
     }
-    Bucketing.tombstoneAppendMaterialized(del, "doc_id", tableName, seq)
+    Bucketing.tombstoneAppendKeys(spark, ids,
+      StructField("doc_id", LongType), tableName, seq)
   }
 
   /** Fold tombstones into the posting base and the `_docs` side table
@@ -581,11 +599,10 @@ object TfIdf {
       // skew the (seq, del_sig) retry machinery exists to prevent. Fail
       // loudly instead: retry the pending delete to completion first
       // (same contract as searchIndexDelete's digest-mismatch path).
-      val book = spark.table(tableName + "_stats")
-        .select("seq", "del_sig").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      val lc = Bucketing.readLifecycle(spark, tableName, withStats = true)
+      val book = lc.book
       val pending = if (book.isEmpty) 0L else book.map(_._1).max
-      val gen = Bucketing.currentGen(spark, tableName)
+      val gen = lc.gen
       if (pending > gen)
         throw new IllegalStateException(
           s"$tableName: a PRIOR delete at sequence $pending left a " +
@@ -647,29 +664,36 @@ object TfIdf {
     * scan to the query terms' buckets (pinned in TfIdfSpec); everything
     * after is bounded by the matched posting count, and the only shuffle
     * is the per-doc score aggregation of those postings. The corpus text
-    * is never touched at probe time. */
+    * is never touched at probe time.
+    *
+    * The call reads the index's `_stats` and `_del` rows ONCE, on the
+    * driver ([[Bucketing.readLifecycle]]), and plans against that read:
+    * N and avgdl become literals, tombstones a broadcast local side. The
+    * returned DataFrame therefore belongs to the index state at call
+    * time — call the probe again after a maintenance write rather than
+    * re-running an older DataFrame. */
   def searchIndexProbe(spark: SparkSession, tableName: String,
       queryTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    // corpus stats ride as a broadcast 1-row side instead of a separate
-    // driver collect job (r19, verdict item 5): same long sums, same
-    // long→double casts, same divide — score arithmetic is bit-identical
-    // to the former lit(n)/lit(avgdl) interpolation
-    val st = spark.table(tableName + "_stats")
-      .agg(sum("n_docs").as("_ln"), sum("total_dl").as("_lt"))
-      .select(col("_ln").cast("double").as("_n"),
-        (col("_lt").cast("double") / col("_ln").cast("double")).as("_avgdl"))
-    val postings = Bucketing.liveView(spark, tableName, "doc_id")
+    val lc = Bucketing.readLifecycle(spark, tableName, withStats = true)
+    // N and avgdl from the call's lifecycle read: the same long sums,
+    // long→double casts and divide as the stats aggregate they replace,
+    // so score arithmetic is bit-identical
+    val n = lc.nDocs.toDouble
+    val avgdl = lc.totalDl.toDouble / lc.nDocs.toDouble
+    // df_t per term over the live matched postings: a window on the
+    // term-bucketed scan, whose hash partitioning by term it reuses —
+    // no shuffle, no broadcast back
+    val postings = Bucketing.liveViewAt(spark.table(tableName), lc, "doc_id")
       .filter(col("term").isin(queryTerms: _*))
-    val dft = postings.groupBy("term").agg(count(lit(1)).as("df_t"))
+      .withColumn("df_t", count(lit(1)).over(Window.partitionBy("term")))
     val idf = log(lit(1.0) +
-      (col("_n") - col("df_t") + 0.5) / (col("df_t") + 0.5))
-    postings.join(broadcast(dft), "term")
-      .crossJoin(broadcast(st))
+      (lit(n) - col("df_t") + 0.5) / (col("df_t") + 0.5))
+    postings
       .withColumn("_s", idf * col("cnt").cast("double") * (lit(k1) + 1.0) /
         (col("cnt").cast("double") + lit(k1) *
-          (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / col("_avgdl"))))
+          (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
       .groupBy("doc_id")
       .agg(sum("_s").as("score"), count(lit(1)).as("n_terms"))
   }

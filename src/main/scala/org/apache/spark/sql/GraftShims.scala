@@ -1,13 +1,24 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into `private[sql]` surface the public API does not expose:
   * constructing a DataFrame from a hand-built LogicalPlan (the entry
   * point every custom logical operator needs — Spark's own DSL does the
-  * same via `Dataset.ofRows`). Kept to this single call; everything
-  * else in the engine goes through the public API. */
+  * same via `Dataset.ofRows`), a Column from a hand-built expression
+  * (a literal whose type is given, not derived by reflection), and an
+  * IN over a driver-side value set as ONE `InSet` node. Kept to these
+  * calls; everything else in the engine goes through the public API. */
 object GraftShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** `c IN values` with a constant-size plan: `Column.isin` makes one
+    * literal child per value, which every analyzer and optimizer pass
+    * walks. `values` are Catalyst values of `c`'s type. */
+  def inSet(c: Column, values: Set[Any]): Column =
+    column(InSet(classic.ExpressionUtils.expression(c), values))
 }

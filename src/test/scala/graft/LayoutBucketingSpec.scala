@@ -558,11 +558,12 @@ class LayoutBucketingSpec extends SparkSpec {
     // threshold — compact_advised flips when the tombstoned-key count
     // reaches spark.graft.tombstone.compactThreshold, so operators get
     // an explicit "compact me" instead of interpreting a number.
-    import graft.ops.{Bucketing, Dedup}
+    import graft.ops.{Bucketing, Dedup, TfIdf}
     import spark.implicits._
     val docs = spark.range(20).select(col("id").as("doc_id"),
       concat(lit("tomb metric fixture text "), col("id")).as("text"))
     val tbl = "graft_spec_tomb_metric"
+    val bm = "graft_spec_tomb_metric_bm25"
     Dedup.dedupIndexBuild(docs, "text", "doc_id", tbl, tableBuckets = 4)
     // two delete calls, one overlapping key: 3 DISTINCT tombstoned keys
     Dedup.dedupIndexDelete(spark, tbl,
@@ -600,11 +601,31 @@ class LayoutBucketingSpec extends SparkSpec {
       org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
       assert(seen.asScala.toSeq == Seq((3L, true)),
         s"at threshold 3 the probe must advise compaction: ${seen}")
+      // the BM25 probe applies tombstones from its one lifecycle read,
+      // as a broadcast local side: the same gauge, once per probe
+      spark.conf.unset(Bucketing.CompactThresholdConf)
+      TfIdf.searchIndexBuild(docs, "doc_id", "text", bm, tableBuckets = 4)
+      TfIdf.searchIndexDelete(spark, bm,
+        docs.filter(col("doc_id").isin(2L, 3L)).select("doc_id"), "doc_id")
+      TfIdf.searchIndexDelete(spark, bm,
+        docs.filter(col("doc_id").isin(3L, 4L)).select("doc_id"), "doc_id")
+      org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
+      seen.clear()
+      TfIdf.searchIndexProbe(spark, bm, Seq("tomb", "metric")).collect()
+      org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
+      assert(seen.asScala.toSeq == Seq((3L, false)),
+        s"BM25 probe must observe 3 tombstoned keys exactly once: ${seen}")
+      seen.clear()
+      spark.conf.set(Bucketing.CompactThresholdConf, "3")
+      TfIdf.searchIndexProbe(spark, bm, Seq("tomb", "metric")).collect()
+      org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
+      assert(seen.asScala.toSeq == Seq((3L, true)),
+        s"at threshold 3 the BM25 probe must advise compaction: ${seen}")
     } finally {
       spark.conf.unset(Bucketing.CompactThresholdConf)
       spark.listenerManager.unregister(listener)
-      Seq(tbl, tbl + "_del").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Seq(tbl, tbl + "_del", bm, bm + "_del", bm + "_docs", bm + "_stats")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
 

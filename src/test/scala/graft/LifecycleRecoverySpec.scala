@@ -362,4 +362,55 @@ class LifecycleRecoverySpec extends SparkSpec {
       bm25Compare(tbl, twin, terms)
     } finally cleanup("graft_spec_lcr_cmp", "graft_spec_lcr_cmp_twin")
   }
+
+  test("searchIndexDelete: a partial delete digested by the aggregate form converges on retry") {
+    // the delete digests its id set and measures its retraction on the
+    // driver. A partial delete persisted by the former aggregate form —
+    // bit_xor(xxhash64(doc_id)) over the distinct id set, retraction
+    // joined from the live `_docs` view, tombstones never landed — must
+    // still read as THIS delete's on retry (a digest mismatch would
+    // fail it as a different id set), then converge exactly. The id
+    // set carries ids deleted earlier (they retract zero) and a NULL id
+    // (it hashes to the seed in both forms and suppresses nothing).
+    val docs = Tables.documents(spark, sf).limit(120).localCheckpoint()
+    val terms = Seq("spark", "merge", "window")
+    val tbl = "graft_spec_lcr_del"
+    val twin = tbl + "_twin"
+    try {
+      TfIdf.searchIndexBuild(docs.filter(col("doc_id") % 5 =!= 0),
+        "doc_id", "text", twin, tableBuckets = 4)
+      TfIdf.searchIndexBuild(docs, "doc_id", "text", tbl, tableBuckets = 4)
+      TfIdf.searchIndexDelete(spark, tbl,
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"), "doc_id")
+      val delIds = docs.filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id").cast("long").as("doc_id"))
+        .unionByName(spark.range(1).select(lit(null).cast("long").as("doc_id")))
+      val del = delIds.distinct()
+      val seq = Bucketing.currentGen(spark, tbl) + 1L
+      val sig = del.select(xxhash64(col("doc_id")).as("_h"))
+        .agg(coalesce(expr("bit_xor(_h)"), lit(0L))).head().getLong(0)
+      Bucketing.appendTable(
+        Bucketing.liveViewOf(spark.table(tbl + "_docs"), spark, tbl + "_del",
+            "doc_id")
+          .join(del, "doc_id")
+          .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
+            (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
+          .withColumn("seq", lit(seq)).withColumn("del_sig", lit(sig))
+          .localCheckpoint(true),
+        tbl + "_stats")
+      TfIdf.searchIndexDelete(spark, tbl, delIds, "doc_id") // the retry
+      val book = spark.table(tbl + "_stats").select("seq", "del_sig").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(book.count(_._1 == seq) == 1 && book.contains((seq, sig)),
+        "the retry must keep the partial delete's retraction, not add one: " +
+          book.mkString(", "))
+      val tomb = spark.table(tbl + "_del").filter(col("seq") === seq)
+      assert(tomb.count() == del.count() && tomb.filter(col("doc_id").isNull)
+          .count() == 1, "the retry must tombstone the whole id set at its seq")
+      def sums(t: String) = spark.table(t + "_stats")
+        .agg(sum("n_docs"), sum("total_dl")).head()
+      assert(sums(tbl) == sums(twin), "stats must equal the survivors' build")
+      bm25Compare(tbl, twin, terms)
+    } finally cleanup("graft_spec_lcr_del", "graft_spec_lcr_del_twin")
+  }
 }
