@@ -184,8 +184,9 @@ object StreamBench {
     // negatives established MemoryStream.addData's driver-side
     // single-threaded Catalyst encode as the ingestion bottleneck; the
     // engine's own DataSource V2 [[graft.sources.PolledSource]] skips
-    // the encoder entirely — the driver only buffers Message objects
-    // (poll at the trigger admission point), and row materialization
+    // the encoder entirely — the driver buffers Message objects (poll at
+    // the trigger admission point) and packs each batch into one byte
+    // block per partition off the stream thread, and row materialization
     // (UTF8String/InternalRow) happens in the PARTITION READERS on
     // executor cores. Same counting sink, same /dev/shm checkpoint,
     // one long-lived query.
