@@ -43,7 +43,6 @@ object Bucketing {
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(spark, name)
   }
 
   /** [[writeBucketed]]'s orphaned-location cleanup for a PLAIN (non-
@@ -57,19 +56,13 @@ object Bucketing {
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(spark, name)
   }
 
-  /** Append rows to a plain (non-bucketed) managed table, recording the
-    * maintenance write — the lifecycle-aware twin of a bare
-    * `write.mode(Append).saveAsTable`. Every side-table append in the
-    * index family (BM25 `_docs`/`_stats`) goes through here so the
-    * [[RefreshEnvelope]] counter covers the WHOLE static family a
-    * streaming probe plans in, not just the bucketed base. */
-  def appendTable(df: DataFrame, name: String): Unit = {
+  /** Append rows to a plain (non-bucketed) managed table — every
+    * side-table append in the index family (BM25 `_docs`/`_stats`,
+    * `_del`) goes through here. */
+  def appendTable(df: DataFrame, name: String): Unit =
     df.write.mode(SaveMode.Append).format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(df.sparkSession, name)
-  }
 
   // ---- compact staging (r18: crash-convergent compaction) ------------
   // Compaction is the one lifecycle op that REWRITES files, and before
@@ -160,8 +153,7 @@ object Bucketing {
 
   /** Remove a staging snapshot: MARKER FIRST (atomic retract — a crash
     * mid-cleanup must not leave a half-deleted directory that still
-    * reads as committed), then the catalog entry, directory, and the
-    * staging table's envelope counter file. */
+    * reads as committed), then the catalog entry and directory. */
   private[graft] def dropStaging(spark: SparkSession,
       stagingName: String): Unit = {
     val loc = tableLoc(spark, stagingName)
@@ -170,7 +162,6 @@ object Bucketing {
     if (fs.exists(marker)) fs.delete(marker, false)
     spark.sql(s"DROP TABLE IF EXISTS `$stagingName`")
     if (fs.exists(loc)) fs.delete(loc, true)
-    RefreshEnvelope.clearCounter(spark, stagingName)
   }
 
   /** The rows of a committed staging snapshot — through the catalog
@@ -222,7 +213,6 @@ object Bucketing {
     df.write.mode(SaveMode.Append)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(df.sparkSession, name)
   }
 
   /** Rewrite a bucketed table in place, collapsing the one-file-per-
@@ -266,40 +256,28 @@ object Bucketing {
     n
   }
 
-  // STATIC-SIDE REFRESH ENVELOPE under a RUNNING STREAM (r16, measured
-  // — StaticRefreshSpec pins all three legs): a streaming query that
-  // joins these tables statically sees the FIRST maintenance write per
-  // static table after stream start (the write refreshes the pinned
-  // V1 relation's file index in place), but NOT the second or later
-  // ones (the first write also evicts the catalog's relation-cache
-  // entry, so subsequent writes refresh a re-resolved relation object
-  // the running stream no longer holds). Batch reads and freshly
-  // started streams always see everything. Operational contract for
-  // continuous maintenance: restart the stream after more than one
-  // lifecycle op per table (compact is already restart-fenced — see
-  // [[tombstoneCompact]]). The alternative — per-micro-batch file
-  // re-listing via a V2 static read — was considered and REJECTED: V2
-  // file scans carry no bucket metadata, so every streaming probe's
-  // static side would gain a per-batch Exchange of the (corpus-sized)
-  // index, destroying the zero-index-Exchange property the layout is
-  // built on to keep one maintenance-pickup edge case.
-  //
-  // r17: the envelope is ENFORCED AT RUNTIME, not just documented —
-  // every write path here bumps a persisted per-table counter, and
-  // [[RefreshEnvelope.capture]]/[[RefreshEnvelope.Guard]] turn "this
-  // stream sailed past its envelope" into a loud warning, a sticky
-  // flag, and a fail-fast assertion (StreamingSpec pins the second
-  // post-start write tripping it).
+  // STREAMS LIST THE INDEX FILES EVERY MICRO-BATCH: the tables a
+  // streaming probe joins statically are read through [[listedTable]],
+  // whose V1 relation keeps the catalog's bucket spec (the scan stays
+  // `Bucketed: true`, no index-side Exchange) but lists the table
+  // directory each time a micro-batch is planned. Every append, delete
+  // and re-insert is therefore visible from the next micro-batch on
+  // (StaticRefreshSpec, StreamingSpec). A micro-batch planned while an
+  // append's job is committing its files may see part of that append;
+  // the next micro-batch sees all of it. A plain `spark.table` relation
+  // instead keeps the listing it was resolved with: a running stream
+  // over it sees only the first write after its start (StaticRefreshSpec
+  // pins that too). Compact rewrites files and stays restart-fenced
+  // ([[maintainIfAdvised]]).
   //
   // SINGLE-MAINTAINER CONTRACT (r17, pinned in LayoutBucketingSpec):
-  // every MUTATING lifecycle op — build, append, delete, compact, and
-  // the [[RefreshEnvelope]] counter bump — assumes ONE maintainer
-  // process per index at a time, the industry norm for index
-  // maintenance. [[currentGen]] is read-then-append with no
-  // coordination BY DESIGN: two concurrent [[tombstoneAppend]]s would
-  // read the same generation and stamp the SAME sequence, and an
-  // append racing a delete gets an ordering neither caller chose —
-  // both are OUTSIDE the contract, not failure modes within it.
+  // every MUTATING lifecycle op — build, append, delete, compact —
+  // assumes ONE maintainer process per index at a time, the industry
+  // norm for index maintenance. [[currentGen]] is read-then-append with
+  // no coordination BY DESIGN: two concurrent [[tombstoneAppend]]s would
+  // read the same generation and stamp the SAME sequence, and an append
+  // racing a delete gets an ordering neither caller chose — both are
+  // OUTSIDE the contract, not failure modes within it.
   // Retry-after-failure by the same maintainer is INSIDE the contract,
   // and as of r18 EVERY multi-write lifecycle op honors it: the BM25
   // delete via its seq-stamped retraction
@@ -308,12 +286,11 @@ object Bucketing {
   // ([[graft.ops.TfIdf.searchIndexAppend]]), and every compact via the
   // durable staged roll-forward protocol (the staging section above) —
   // single-table appends and builds were always atomic-at-job-commit /
-  // overwrite-idempotent respectively. Concurrent READERS — probes,
-  // guards, streams — are
-  // unrestricted: every op short of compact is a pure append, and
-  // compact is restart-fenced. Cross-SESSION isolation (two apps, two
-  // different indexes, one warehouse) is separately guaranteed by the
-  // app-id-suffixed staging names in [[bucketedJoin]].
+  // overwrite-idempotent respectively. Concurrent READERS — probes and
+  // streams — are unrestricted: every op short of compact is a pure
+  // append, and compact is restart-fenced. Cross-SESSION isolation (two
+  // apps, two different indexes, one warehouse) is separately guaranteed
+  // by the app-id-suffixed staging names in [[bucketedJoin]].
   //
   // ---- tombstone lifecycle (r15; generation-stamped r16) -------------
   // Shared by every persisted index that supports retraction (the
@@ -335,7 +312,7 @@ object Bucketing {
   // latest-op-wins key log would resurrect them alongside the fresh
   // row (r15 ADVICE).
   //
-  // ONE READ PER BATCH CALL, A TABLE-BACKED VIEW PER STREAM: a batch
+  // ONE READ PER BATCH CALL, A LISTED VIEW PER STREAM: a batch
   // BM25 or IVFADC call (probe, append, delete, compact) reads `_del`
   // — and BM25's `_stats` — ONCE on the driver ([[readLifecycle]]) and
   // plans the rest of the call against that read: tombstones become a
@@ -345,12 +322,12 @@ object Bucketing {
   // and on sub-second calls per-job coordination, not compute, is the
   // latency. Streaming constructors (`TfIdf.searchScoreStream`,
   // `Similarity.ivfPqMatchStream`, the Dedup and Linkage streams) keep
-  // the table-backed [[liveView]]: its `_del` scan re-resolves per
+  // the table-backed [[liveView]]: its `_del` scan is listed every
   // micro-batch, so a delete that lands after the stream started still
-  // suppresses rows (within the refresh envelope above), where a
-  // driver-side read taken when the stream was defined would freeze its
-  // tombstones for the stream's life. The two are one liveness rule
-  // over two sources, not two paths for the same job.
+  // suppresses rows, where a driver-side read taken when the stream was
+  // defined would freeze its tombstones for the stream's life. The two
+  // are one liveness rule over two sources, not two paths for the same
+  // job.
 
   /** The generation column stamped onto tombstone-capable index rows —
     * see [[withGen]] / [[currentGen]]. [[liveView]] consumes and drops
@@ -484,7 +461,7 @@ object Bucketing {
     * derivation on the serving path) — no `_del` scan or aggregate at
     * execution — and no join at all when the index has no tombstones.
     * For BATCH calls only: a streaming query must keep the table-backed
-    * [[liveView]], whose `_del` scan re-resolves per micro-batch, or it
+    * [[liveView]], whose `_del` scan is listed per micro-batch, or it
     * would never see a delete issued after it started. */
   def liveViewAt(base: DataFrame, lc: Lifecycle, keyCol: String): DataFrame =
     if (lc.tombstones.isEmpty) base.drop(GenCol)
@@ -520,8 +497,9 @@ object Bucketing {
     * delete) is load-bearing for STREAMING probes: a stream plans the
     * [[liveView]] join at definition time, so the `_del` table must
     * exist then for a later mid-stream delete to take effect — appends
-    * to an existing static table re-resolve per micro-batch, a table
-    * that appears mid-stream does not. Also discards any stale
+    * to an existing static table are listed per micro-batch, but a
+    * table that appears mid-stream is not in the plan at all. Also
+    * discards any stale
     * tombstones of a previous same-name index. */
   def initTombstones(keySchema: DataFrame, keyCol: String,
       tableName: String): Unit = {
@@ -605,7 +583,8 @@ object Bucketing {
     * way — downstream probe schemas are generation-free. */
   def liveView(spark: SparkSession, tableName: String,
       keyCol: String): DataFrame =
-    liveViewOf(spark.table(tableName), spark, tableName + "_del", keyCol)
+    liveViewOf(listedTable(spark, tableName), spark, tableName + "_del",
+      keyCol)
 
   /** [[liveView]] for a base DataFrame that is not `spark.table(name)`
     * of the delete table's own index — side tables sharing the index's
@@ -615,15 +594,23 @@ object Bucketing {
       keyCol: String): DataFrame = {
     import org.apache.spark.sql.functions.max
     if (!spark.catalog.tableExists(delTable)) base.drop(GenCol)
-    else suppressDeleted(base, spark.table(delTable)
+    else suppressDeleted(base, listedTable(spark, delTable)
       .groupBy(keyCol).agg(max("seq").as("_del_seq")), keyCol)
   }
+
+  /** `spark.table(name)` for the static side of a stream: the same V1
+    * bucketed relation, except that its files are listed each time a
+    * query over it is planned: every micro-batch of a stream sees the
+    * table's current files (see "streams list the index files every
+    * micro-batch" above). */
+  def listedTable(spark: SparkSession, name: String): DataFrame =
+    org.apache.spark.sql.graftshim.ListedTable.read(spark, name)
 
   /** Fold tombstones into the base: rewrite the index to its live rows
     * at generation 0 (one file per bucket, the [[compactBucketed]]
     * layout contract) and truncate the tombstone table — truncate, NOT
     * drop, so streams that planned the [[liveView]] join keep a valid
-    * (empty) table to re-resolve; generation and sequence reset
+    * (empty) table to list; generation and sequence reset
     * together, so liveness is unchanged by construction. The ONLY
     * lifecycle op that rewrites files — run it without a live stream
     * over the same index (the [[compactBucketed]] rule). Returns the

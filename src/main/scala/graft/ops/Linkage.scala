@@ -313,18 +313,7 @@ object Linkage {
     // coalescing; the SMJ reuses the partitioning, so there is no extra
     // exchange) and pin the merge strategy so the plan is identical at
     // every scale.
-    val factor = d.sparkSession.conf
-      .getOption("spark.graft.linkage.candidatePartsFactor")
-      .map { s =>
-        val f = try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.linkage.candidatePartsFactor must be a positive int, got '$s'")
-        }
-        require(f > 0,
-          s"spark.graft.linkage.candidatePartsFactor must be positive, got $f")
-        f
-      }.getOrElse(8)
-    val parts = d.sparkSession.sparkContext.defaultParallelism * factor
+    val parts = d.sparkSession.sparkContext.defaultParallelism * 8
     dSeg.repartition(parts, col("k")).hint("shuffle_merge")
       .join(cSeg.repartition(parts, col("k")), Seq("k"))
       .select("d_id", "d_s", "c_id", "c_s")
@@ -571,7 +560,6 @@ object Linkage {
       tsCol: String, watermark: String,
       spark: org.apache.spark.sql.SparkSession,
       tableName: String): DataFrame = {
-    RefreshEnvelope.autoGuard(spark, tableName) // default-on envelope guard (r18)
     val (tau, bounds) = readEditIndexMeta(spark, tableName)
     // watermark BEFORE the branch so both legs carry it into the union
     val d = stream

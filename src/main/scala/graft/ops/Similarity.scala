@@ -717,7 +717,6 @@ object Similarity {
       tsCol: String, spark: SparkSession, tableName: String,
       codebooks: Array[Array[Seq[Double]]], coarseCents: Array[Seq[Double]],
       maxDist: Double, nprobe: Int = 3): DataFrame = {
-    RefreshEnvelope.autoGuard(spark, tableName) // default-on envelope guard (r18)
     val q = stream.select(col(idCol).as("q_id"), col(tsCol).as("ts"),
       adcL2Tables(vecCol, codebooks).as("_tab"),
       explode(coarseProbeCells(col(vecCol), coarseCents, nprobe)).as("cell"))

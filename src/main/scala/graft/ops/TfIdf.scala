@@ -173,10 +173,9 @@ object TfIdf {
     * same way [[searchIndexDelete]] is (r18 — single MAINTAINER, not
     * single ATTEMPT): before anything lands, the batch's digest is
     * written to a tiny `<table>.__append` MARKER FILE next to the
-    * warehouse tables (temp + atomic rename, the [[RefreshEnvelope]]
-    * counter pattern — a FILE, not a table row, so the append still
-    * makes exactly one write per family table and a running stream's
-    * refresh envelope is untouched), and the additive stats row —
+    * warehouse tables (temp + atomic rename — a FILE, not a table row,
+    * so the append still makes exactly one write per family table and
+    * streams never scan it), and the additive stats row —
     * stamped with the same digest in its `del_sig` column — lands
     * LAST, so its presence means the whole append completed and the
     * marker clears. The digest is the order-free XOR of
@@ -325,10 +324,10 @@ object TfIdf {
     } finally perDoc.unpersist()
   }
 
-  /** Warehouse path of the pending-append marker file — a FILE, not a
-    * table row, so the marker adds no family-table write (the refresh
-    * envelope of a running stream sees exactly one `_stats` write per
-    * append, as before r18). */
+  /** Warehouse path of the pending-append marker file — a FILE beside
+    * the tables, not a table row: an append still writes each family
+    * table once, and stream probes, which scan only the tables, never
+    * read it. */
   private def appendMarkerPath(spark: SparkSession,
       tableName: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(
@@ -349,8 +348,9 @@ object TfIdf {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Write the pending-append marker via temp + atomic rename (the
-    * [[RefreshEnvelope.recordWrite]] pattern — never torn). */
+  /** Write the pending-append marker via temp + FileContext's atomic
+    * rename-with-overwrite: a reader sees the old digest or the new one,
+    * never a torn or missing file. */
   private def writeAppendMarker(spark: SparkSession, tableName: String,
       digest: Long): Unit = {
     val p = appendMarkerPath(spark, tableName)
@@ -709,7 +709,7 @@ object TfIdf {
     * row per batch. */
   private def searchStatsSide(spark: SparkSession, tableName: String,
       queryTerms: Seq[String]): DataFrame = {
-    val st = spark.table(tableName + "_stats")
+    val st = Bucketing.listedTable(spark, tableName + "_stats")
       .agg(sum("n_docs").cast("double").as("_n"),
         sum("total_dl").cast("double").as("_tdl"))
       .select(col("_n"), (col("_tdl") / col("_n")).as("_avgdl"))
@@ -758,13 +758,12 @@ object TfIdf {
 
   /** Streaming [[searchIndexScoreDocs]] — standing-query BM25 scoring
     * at ingest against the persisted posting index. STATELESS: the
-    * score is a per-row projection, and ONE index APPEND or DELETE
-    * after stream start shifts subsequent scores exactly as the batch
-    * twin's would — no restart, within the measured static-side
-    * refresh envelope shared by every streaming probe in the family
-    * (first maintenance write per static table is visible, later ones
-    * need a restart: StaticRefreshSpec + the [[Bucketing]] lifecycle
-    * note; StreamingSpec pins stream ≡ batch across a delete).
+    * score is a per-row projection. The postings, `_del` and `_stats`
+    * are listed every micro-batch ([[Bucketing.listedTable]]), so each
+    * index APPEND or DELETE after stream start shifts the scores of
+    * the next micro-batch exactly as the batch twin's would, with no
+    * restart (StreamingSpec pins stream ≡ batch across a delete and
+    * across two appends).
     * `minScore` is the alerting threshold (0.0 = emit every
     * ≥1-term match). Output: (doc_id, ts, score, n_terms), append
     * mode. */
@@ -773,7 +772,6 @@ object TfIdf {
       tableName: String, queryTerms: Seq[String], minScore: Double = 0.0,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    RefreshEnvelope.autoGuard(spark, tableName) // default-on envelope guard (r18)
     scoredAgainstStats(
       stream.select(col(idCol).cast("long").as("doc_id"), col(textCol),
         col(tsCol).as("ts")),

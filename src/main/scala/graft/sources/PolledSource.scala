@@ -189,13 +189,7 @@ final case class PolledSource(poller: Poller, batchSize: Int = 100) extends Sour
     val all = Iterator.continually(poller.poll(batchSize))
       .takeWhile(_.nonEmpty).flatten.toIndexedSeq
     poller.ack(all.size.toLong)
-    val parts = PolledBlock.split(all, 0, all.size, spark.sparkContext.defaultParallelism)
-    val rows = spark.sparkContext.parallelize(parts.toSeq, math.max(1, parts.length))
-      .mapPartitions(_.flatMap { p =>
-        val r = PolledBlock.reader(p)
-        Iterator.continually(r).takeWhile(_.next()).map(_.get())
-      })
-    GraftShims.internalCreateDataFrame(spark, rows, Message.schema)
+    PolledBlock.dataFrame(spark, all)
   }
 
   def close(): Unit = PollerRegistry.unregister(pollerId)
@@ -289,6 +283,20 @@ private[sources] class PolledReaderFactory extends PartitionReaderFactory {
   * `String.getBytes(UTF_8)` does (an unpaired surrogate becomes '?'). */
 private[graft] object PolledBlock {
   private final val Null = -1
+
+  /** `msgs` as a batch DataFrame of [[Message.schema]]: at most
+    * `defaultParallelism` blocks, decoded straight into Catalyst rows —
+    * the one row-conversion path of every polled source's batch mode. */
+  def dataFrame(spark: SparkSession,
+      msgs: collection.IndexedSeq[Message]): DataFrame = {
+    val parts = split(msgs, 0, msgs.size, spark.sparkContext.defaultParallelism)
+    val rows = spark.sparkContext.parallelize(parts.toSeq, math.max(1, parts.length))
+      .mapPartitions(_.flatMap { p =>
+        val r = reader(p)
+        Iterator.continually(r).takeWhile(_.next()).map(_.get())
+      })
+    GraftShims.internalCreateDataFrame(spark, rows, Message.schema)
+  }
 
   /** Messages [from, until) of `msgs` as at most `k` partitions of
     * near-equal row counts, in order; none for an empty range. */

@@ -175,10 +175,7 @@ final case class TcpSocketSource(host: String, port: Int,
       all ++= got
       done = poller.isEof && got.isEmpty
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(all.toSeq.map(m =>
-        org.apache.spark.sql.Row(m.key, m.value, m.topic, m.attributes))),
-      Message.schema)
+    PolledBlock.dataFrame(spark, all)
   }
   def close(): Unit = { streamPoller.close(); polled.close() }
 }

@@ -12,24 +12,17 @@ import org.apache.spark.sql.functions._
   * handling, gap sessions, keyed state.
   *
   * EVERY streaming probe below that joins a persisted index statically
-  * inherits the measured static-side refresh envelope (r16,
-  * StaticRefreshSpec + the note atop [[graft.ops.Bucketing]]'s
-  * lifecycle section): the FIRST maintenance write per static table
-  * after stream start is visible to the running stream; later writes
-  * to the SAME table are not — restart the stream for continuous
-  * maintenance. "Takes effect without restart" in the per-operator
-  * docs means within that envelope. The envelope is ENFORCED at
-  * runtime, DEFAULT-ON (r17 enforcement, r18 default-on): every probe
-  * constructor below that joins a persisted index captures + attaches
-  * its own [[graft.ops.RefreshEnvelope]] guard over the index family
-  * at definition time — a second post-start maintenance write warns
-  * loudly, flips the guard's sticky `breached` flag after the next
-  * micro-batch, posts an `EnvelopeBreachEvent` to the listener bus,
-  * and fails fast via `assertFresh()` (reach the auto-guard with
-  * `RefreshEnvelope.guardOf(spark, tableName)`; StreamingSpec pins
-  * the unguarded-by-hand trip). Composite pipelines joining several
-  * index families can still capture manual guards via
-  * `RefreshEnvelope.captureIndex`.
+  * reads the index tables through [[graft.ops.Bucketing.listedTable]]:
+  * the bucketed V1 relation of `spark.table`, with the table's files
+  * listed each time a micro-batch is planned. Every append, delete and
+  * re-insert after stream start therefore takes effect from the next
+  * micro-batch on, with no restart and no bound on the number of writes
+  * (StreamingSpec, StaticRefreshSpec); a micro-batch planned while an
+  * append's job is committing may see part of it, and the next one sees
+  * all of it. "Takes effect without restart" in the per-operator docs
+  * means exactly this. Compact rewrites index files and must run with
+  * no live stream over the index
+  * ([[graft.ops.Bucketing.maintainIfAdvised]] enforces it).
   */
 object StreamingOps {
 
@@ -132,7 +125,6 @@ object StreamingOps {
       bits: Int = 8, tables: Int = 4, probes: Int = 0,
       seed: Long = 42L): DataFrame = {
     import graft.functions.VectorFunctions._
-    graft.ops.RefreshEnvelope.autoGuard(spark, tableName) // default-on envelope guard (r18)
     val buckets = {
       val all = (0 until tables).flatMap { t =>
         val sig = hyperplaneSig(col(vecCol), bits, dim, seed + t)
@@ -200,9 +192,9 @@ object StreamingOps {
     * live statistics (df_t / N / avgdl) for a fixed set of standing
     * query terms — the reference's filter-then-route shape with a
     * learned-statistics scorer (alerting on keyword relevance, routing
-    * by topic). STATELESS per-row projection; one index append/delete
-    * after stream start shifts subsequent scores without restart
-    * (within the object-doc refresh envelope). Batch twin:
+    * by topic). STATELESS per-row projection; each index append/delete
+    * after stream start shifts the next micro-batch's scores without
+    * restart (see the object doc). Batch twin:
     * [[graft.ops.TfIdf.searchIndexScoreDocs]] (TfIdfSpec pins
     * batch ≡ probe; StreamingSpec pins stream ≡ batch across a
     * mid-stream delete, scores not just matches). */
@@ -255,7 +247,6 @@ object StreamingOps {
   def fingerprintIngestStream(stream: DataFrame, fpCol: String,
       tsCol: String, watermark: String, spark: SparkSession,
       tableName: String): DataFrame = {
-    graft.ops.RefreshEnvelope.autoGuard(spark, tableName) // default-on envelope guard (r18)
     stream
       .join(graft.ops.Dedup.liveFingerprintIndex(spark, tableName),
         col(fpCol) === col("fp"), "left_anti")

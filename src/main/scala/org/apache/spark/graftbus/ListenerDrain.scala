@@ -18,13 +18,4 @@ import org.apache.spark.SparkContext
 object ListenerDrain {
   /** Block until every queued listener event has been delivered. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  /** Post a custom event onto the shared bus (r18: the refresh
-    * envelope's [[graft.ops.RefreshEnvelope.EnvelopeBreachEvent]]
-    * metric bridge — breaches reach the event log and any registered
-    * SparkListener, i.e. cluster monitoring, not just stderr). Same
-    * `private[spark]` access as [[drain]]. */
-  def post(sc: SparkContext,
-      event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-    sc.listenerBus.post(event)
 }

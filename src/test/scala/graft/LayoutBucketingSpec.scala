@@ -668,104 +668,6 @@ class LayoutBucketingSpec extends SparkSpec {
         spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
-  test("RefreshEnvelope: persisted per-table write counter counts every lifecycle op; guard trips on the second write") {
-    // r17 (r16 verdict item 1, batch half — the live-stream trip is in
-    // StreamingSpec): every Bucketing write path bumps a persisted
-    // counter file, capture() snapshots it, and staleTables/assertFresh
-    // flag a table written MORE THAN ONCE since capture (the first
-    // write is inside the measured envelope — visible to a running
-    // stream — so it must NOT trip).
-    import graft.ops.{Bucketing, Dedup, RefreshEnvelope}
-    import spark.implicits._
-    val docs = spark.range(16).select(col("id").as("doc_id"),
-      concat(lit("envelope counter fixture "), col("id")).as("text"))
-    val tbl = "graft_spec_envelope_ctr"
-    try {
-      val before = RefreshEnvelope.writeCount(spark, tbl)
-      Dedup.dedupIndexBuild(docs, "text", "doc_id", tbl, tableBuckets = 4)
-      assert(RefreshEnvelope.writeCount(spark, tbl) == before + 1,
-        "build must record one write on the base table")
-      assert(RefreshEnvelope.tablesOf(spark, tbl).toSet ==
-        Set(tbl, tbl + "_del"), "family discovery: base + tombstones")
-      val guard = RefreshEnvelope.captureIndex(spark, tbl)
-      assert(guard.staleTables.isEmpty && !guard.breached)
-      // write #1 per table: inside the envelope — must not trip
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 3L), "text")
-      assert(guard.staleTables.isEmpty,
-        "the FIRST post-capture write is visible to a running stream " +
-          "and must not trip the guard")
-      guard.assertFresh()
-      // write #2 on _del: past the envelope — trips
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 4L), "text")
-      assert(guard.staleTables == Seq(tbl + "_del"),
-        s"the SECOND write must trip: ${guard.staleTables}")
-      val ex = intercept[IllegalStateException](guard.assertFresh())
-      assert(ex.getMessage.contains("refresh envelope") &&
-        ex.getMessage.contains(tbl + "_del") &&
-        ex.getMessage.contains("Restart"),
-        s"fail-fast message must name the stale table and the remedy: ${ex.getMessage}")
-      assert(guard.breached, "breach flag must latch")
-    } finally
-      Seq(tbl, tbl + "_del").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-  }
-
-  test("RefreshEnvelope: counters are per-index-family — maintenance on one index never trips another's guard; the BM25 family counts every side table") {
-    // The guard must be a per-stream-per-family signal, not a global
-    // "something was written somewhere" alarm: a pipeline running ten
-    // streams over ten indexes compacts one of them and must restart
-    // ONE stream. And the family coverage must include the side tables
-    // a probe plans in: searchIndexAppend touches base + _docs +
-    // _stats; searchIndexDelete touches _del + _stats (the postings are
-    // suppressed via _del, not rewritten).
-    import graft.ops.{Dedup, RefreshEnvelope, TfIdf}
-    import spark.implicits._
-    val docs = spark.range(24).select(col("id").as("doc_id"),
-      concat(lit("family isolation fixture text "), col("id")).as("text"))
-    val a = "graft_spec_env_fam_a" // BM25 posting index
-    val b = "graft_spec_env_fam_b" // fingerprint index
-    try {
-      TfIdf.searchIndexBuild(docs, "doc_id", "text", a, tableBuckets = 4)
-      Dedup.dedupIndexBuild(docs, "text", "doc_id", b, tableBuckets = 4)
-      assert(RefreshEnvelope.tablesOf(spark, a).toSet ==
-        Set(a, a + "_del", a + "_docs", a + "_stats"),
-        "BM25 family discovery must include every side table")
-      val guardA = RefreshEnvelope.captureIndex(spark, a)
-      val guardB = RefreshEnvelope.captureIndex(spark, b)
-      val before = Seq(a, a + "_docs", a + "_stats", a + "_del")
-        .map(t => RefreshEnvelope.writeCount(spark, t))
-      // two deletes on B: B's guard trips, A's must stay quiet
-      Dedup.dedupIndexDelete(spark, b, docs.filter(col("doc_id") === 1L), "text")
-      Dedup.dedupIndexDelete(spark, b, docs.filter(col("doc_id") === 2L), "text")
-      assert(guardB.staleTables == Seq(b + "_del"))
-      assert(guardA.staleTables.isEmpty,
-        "maintenance on another index must not trip this guard")
-      guardA.assertFresh()
-      // one append on A: base + _docs + _stats each gain exactly one
-      // write; _del untouched
-      TfIdf.searchIndexAppend(
-        docs.select(col("doc_id") + 1000L as "doc_id", col("text")),
-        "doc_id", "text", a, tableBuckets = 4)
-      val after = Seq(a, a + "_docs", a + "_stats", a + "_del")
-        .map(t => RefreshEnvelope.writeCount(spark, t))
-      assert(after.zip(before).map { case (x, y) => x - y } ==
-        Seq(1L, 1L, 1L, 0L),
-        s"append must count base/_docs/_stats once each: $before -> $after")
-      // one delete on A: _del and _stats gain one write each — still
-      // inside the envelope (first write per table since capture...
-      // except _stats, which the append above already wrote once)
-      TfIdf.searchIndexDelete(spark, a,
-        docs.filter(col("doc_id") === 3L).select("doc_id"), "doc_id")
-      assert(guardA.staleTables == Seq(a + "_stats"),
-        "append + delete both wrote _stats: the SECOND write trips on " +
-          s"exactly that table: ${guardA.staleTables}")
-    } finally
-      Seq(a, a + "_del", a + "_docs", a + "_stats", b, b + "_del")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-  }
-
   test("CompactThresholdConf: a malformed value fails naming the conf key, not as a bare NumberFormatException") {
     // r17 ADVICE: compactThreshold did an unvalidated .toLong, so a
     // typo'd conf surfaced as a bare NumberFormatException from inside
@@ -799,7 +701,7 @@ class LayoutBucketingSpec extends SparkSpec {
     // files, so a live stream with this index family in its analyzed
     // plan is refused loudly, while an unrelated stream (the normal
     // many-streams-many-indexes topology) does not block.
-    import graft.ops.{Bucketing, Dedup, RefreshEnvelope}
+    import graft.ops.{Bucketing, Dedup}
     import graft.streaming.StreamingOps
     import spark.implicits._
     val docs = spark.range(20).select(col("id").as("doc_id"),
@@ -850,37 +752,8 @@ class LayoutBucketingSpec extends SparkSpec {
       assert(Bucketing.maintainIfAdvised(spark, tbl, "fp", "fp", 4).isEmpty)
     } finally {
       spark.conf.unset(Bucketing.CompactThresholdConf)
-      RefreshEnvelope.guardOf(spark, tbl).foreach(_.detach())
       Seq(tbl, tbl + "_del").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
-  }
-
-  test("RefreshEnvelope counters honor the conf-selectable directory — the object-store escape hatch") {
-    // r18 (r17 verdict item 3): the counter scheme requires an
-    // atomic-rename filesystem; on an object-store warehouse the
-    // counters route to a rename-atomic store via CounterDirConf while
-    // the data stays put. Pin: the conf moves the counter file, and
-    // reads follow the same conf.
-    import graft.ops.RefreshEnvelope
-    val dir = java.nio.file.Files.createTempDirectory("graft_env_ctr")
-      .toString
-    val t = "graft_spec_ctr_dir_tbl"
-    // a SEPARATE session: the conf is per-session runtime conf (this
-    // also pins that), and mutating the shared suite session's conf
-    // would race concurrently-running suites' lifecycle writes into
-    // the temp dir for the duration of the test
-    val s2 = spark.newSession()
-    s2.conf.set(RefreshEnvelope.CounterDirConf, dir)
-    assert(RefreshEnvelope.writeCount(s2, t) == 0L)
-    RefreshEnvelope.recordWrite(s2, t)
-    RefreshEnvelope.recordWrite(s2, t)
-    assert(RefreshEnvelope.writeCount(s2, t) == 2L)
-    assert(new java.io.File(dir, t + ".__writes").isFile,
-      s"counter must land under $dir")
-    // the suite session never saw the conf: reads stay on the
-    // warehouse dir, where nothing landed
-    assert(RefreshEnvelope.writeCount(spark, t) == 0L,
-      "no counter may leak into the warehouse dir")
   }
 }

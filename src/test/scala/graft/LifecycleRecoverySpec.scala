@@ -25,9 +25,8 @@ import graft.ops.{Bucketing, TfIdf}
   *     them), and a rebuild supersedes the pending compact;
   *   - [[TfIdf.searchIndexAppend]] is retryable across its three
   *     non-atomic appends via a pending-marker FILE + gen-salted batch
-  *     digest (no extra family-table write — the refresh envelope of a
-  *     running stream is untouched), converging with no doubled
-  *     postings from every partial state;
+  *     digest (a file, not an extra family-table write), converging
+  *     with no doubled postings from every partial state;
   *   - [[TfIdf.searchIndexCompact]] stages its side-table rewrites and
   *     rolls forward — in particular the r18 dangling-retraction guard
   *     must NOT false-fire on the retry of a compact that crashed after

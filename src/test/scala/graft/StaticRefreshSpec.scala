@@ -6,25 +6,21 @@ import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
 
-/** The STATIC-SIDE REFRESH ENVELOPE of stream-static plans over V1
-  * catalog parquet tables — measured r16, mechanism in the scaladoc of
-  * [[graft.ops.Bucketing]]'s lifecycle section:
+/** What a running stream sees of later writes to a V1 catalog parquet
+  * table it joins statically.
   *
-  *   - the FIRST maintenance write to a static table after stream start
-  *     IS visible to the running stream (the write refreshes the
-  *     pinned relation's file index in place);
-  *   - the SECOND write is NOT (the first write also evicted the
-  *     catalog's relation-cache entry, so later writes refresh a
-  *     re-resolved relation object the running stream no longer
-  *     holds);
-  *   - batch reads and freshly-started streams always see everything.
+  * Through plain `spark.table` (measured, Spark 4.1):
+  *   - the FIRST write to the table after stream start IS visible (the
+  *     write refreshes the pinned relation's file index in place);
+  *   - the SECOND and later writes are NOT (the first write also evicted
+  *     the catalog's relation-cache entry, so later writes refresh a
+  *     re-resolved relation the running stream no longer holds);
+  *   - batch reads and freshly started streams see everything.
   *
-  * Every streaming probe documents this envelope (at most ONE
-  * maintenance op per static table per stream lifetime; restart — or
-  * compact-and-restart — for continuous maintenance). Pinning the
-  * STALE case too is deliberate: if a Spark upgrade ever changes the
-  * envelope, this spec fails and the documented contract gets
-  * re-measured instead of silently drifting.
+  * Through [[graft.ops.Bucketing.listedTable]], which every streaming
+  * probe uses for its index tables, each write is visible from the next
+  * micro-batch on. Pinning the frozen `spark.table` case too is
+  * deliberate: if a Spark upgrade changes it, this spec says so.
   */
 class StaticRefreshSpec extends SparkSpec {
   import spark.implicits._
@@ -80,6 +76,49 @@ class StaticRefreshSpec extends SparkSpec {
       } finally { q2.stop(); q2.awaitTermination() }
     } finally {
       q.stop(); q.awaitTermination()
+      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    }
+  }
+
+  test("listedTable: a running stream sees writes #1, #2 and #3; the same stream over spark.table freezes after #1") {
+    val tbl = "graft_spec_refresh_listed"
+    Bucketing.writeTable(Seq((10L, 100L)).toDF("n_docs", "total_dl"), tbl)
+    def statsSide(t: org.apache.spark.sql.DataFrame) =
+      t.agg(sum("n_docs").cast("double").as("_n")).withColumn("_k", lit(1))
+    def start(side: org.apache.spark.sql.DataFrame, id: Int, name: String) = {
+      val ms = new MemoryStream[(Long, Timestamp)](id, spark, None)
+      val q = ms.toDF().toDF("id", "ts").withColumn("_k", lit(1))
+        .join(broadcast(statsSide(side)), "_k").select("id", "_n")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      (ms, q)
+    }
+    val (rawIn, raw) = start(spark.table(tbl), 86, "refresh_raw_out")
+    val (listedIn, listed) =
+      start(Bucketing.listedTable(spark, tbl), 87, "refresh_listed_out")
+    // the `_n` each stream computes for a row sent now
+    def seen(id: Long): (Double, Double) = {
+      Seq(rawIn -> raw, listedIn -> listed).foreach { case (in, q) =>
+        in.addData(Seq((id, ts(id.toInt)))); q.processAllAvailable()
+      }
+      def n(out: String) = spark.table(out).filter(col("id") === id)
+        .select("_n").as[Double].head()
+      (n("refresh_raw_out"), n("refresh_listed_out"))
+    }
+    def append(n: Long): Unit = Bucketing.appendTable(
+      Seq((n, n * 10)).toDF("n_docs", "total_dl"), tbl)
+    try {
+      assert(seen(1L) == ((10.0, 10.0)))
+      append(5L)
+      assert(seen(2L) == ((15.0, 15.0)), "write #1: both see it")
+      append(-3L)
+      assert(seen(3L) == ((15.0, 12.0)),
+        "write #2: spark.table is frozen, the listed read is not")
+      append(100L)
+      assert(seen(4L) == ((15.0, 112.0)),
+        "write #3: spark.table is frozen, the listed read is not")
+    } finally {
+      Seq(raw, listed).foreach { q => q.stop(); q.awaitTermination() }
       spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
     }
   }

@@ -837,10 +837,7 @@ class StreamingSpec extends SparkSpec {
     // query BM25 at ingest. The stats side (df_t / N / avgdl) is what
     // makes the maintenance case interesting: a delete moves the
     // SCORES of later batches exactly to the batch twin's, not just
-    // the match sets. The test stays inside the measured static-side
-    // refresh envelope (StaticRefreshSpec: at most ONE maintenance
-    // write per static table per stream lifetime) — the delete is the
-    // single post-start write to _stats and to _del.
+    // the match sets.
     import graft.ops.TfIdf
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).cache()
@@ -911,124 +908,196 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("RefreshEnvelope guard under a LIVE stream: second post-start maintenance write trips the attached listener") {
-    // r17 (r16 verdict item 1): the static-side refresh envelope gains
-    // its runtime signal. A streaming probe's index family is captured
-    // at stream definition; ONE maintenance write per table stays
-    // silent (it IS visible to the running stream — StaticRefreshSpec),
-    // and the SECOND write flips the guard's sticky breach flag via the
-    // per-micro-batch listener check and fails assertFresh() — the
-    // operator gets "restart me" at breach time instead of stale
-    // results at debug time.
-    import graft.ops.{Dedup, RefreshEnvelope}
-    val docs = spark.range(30).select(col("id").as("doc_id"),
-      concat(lit("envelope stream fixture "), col("id")).as("text"))
-    val tbl = "graft_spec_envelope_stream"
-    Dedup.dedupIndexBuild(docs.filter(col("doc_id") < 10), "text",
-      "doc_id", tbl, tableBuckets = 4)
-    val guard = RefreshEnvelope.captureIndex(spark, tbl).attach()
+  test("dedupIngestStream: deletes #1, #2 and #3 and a re-append each take effect in the next micro-batch; the index scan stays bucketed") {
+    // The index tables are listed every micro-batch
+    // (Bucketing.listedTable), so no number of maintenance writes after
+    // stream start goes unseen. A stream over plain `spark.table`
+    // relations would see only the first write per table
+    // (StaticRefreshSpec): deletes #2 and #3 would not re-admit their
+    // texts, and the re-append (the second write to the base table)
+    // would not drop its text again.
+    import graft.ops.Dedup
+    val docs = spark.range(10).select(col("id").as("doc_id"),
+      concat(lit("listed stream fixture "), col("id")).as("text"))
+    def text(i: Long) = s"listed stream fixture $i"
+    val tbl = "graft_spec_listed_stream"
+    Dedup.dedupIndexBuild(docs, "text", "doc_id", tbl, tableBuckets = 4)
     val ms = new MemoryStream[(Long, String, Timestamp)](83, spark, None)
     val out = StreamingOps.dedupIngestStream(
       ms.toDF().toDF("doc_id", "text", "ts"), "text", "doc_id", "ts",
       "10 minutes", spark, tbl)
-    val q = out.writeStream.format("memory").queryName("envelope_stream_out")
-      .outputMode("append").start()
-    def batch(ids: Seq[Long], m: Int): Unit = {
-      ms.addData(ids.map(i =>
-        (i, s"envelope stream fixture $i", ts(m))))
+    // no broadcast of the index: the anti-join must consume the bucketed
+    // scan directly, as the batch probe does
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val q = try out.writeStream.format("memory")
+        .queryName("listed_stream_out").outputMode("append").start()
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the ids one micro-batch lets through
+    def batch(rows: Seq[(Long, String)], m: Int): Set[Long] = {
+      val before = spark.table("listed_stream_out").select("doc_id")
+        .as[Long].collect().toSet
+      ms.addData(rows.map { case (id, t) => (id, t, ts(m)) })
       q.processAllAvailable()
-      // listener delivery is async — deterministic drain, no sleeps
-      org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
+      spark.table("listed_stream_out").select("doc_id")
+        .as[Long].collect().toSet -- before
     }
+    def delete(ids: Long*): Unit =
+      Dedup.dedupIndexDelete(spark, tbl,
+        docs.filter(col("doc_id").isin(ids: _*)), "text")
     try {
-      batch(Seq(5L, 15L), 0)
-      assert(!guard.breached && guard.staleTables.isEmpty,
-        "no maintenance yet: guard must be quiet")
-      // write #1 on _del — inside the envelope, visible to the stream
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 5L), "text")
-      batch(Seq(5L, 16L), 1)
-      assert(!guard.breached && guard.staleTables.isEmpty,
-        "the FIRST post-start write per table must NOT trip the guard")
-      guard.assertFresh()
-      // write #2 on _del — past the envelope: the stream no longer sees
-      // this delete; the guard must say so after the next micro-batch
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 6L), "text")
-      batch(Seq(6L, 17L), 2)
-      assert(guard.breached,
-        "the SECOND post-start write must trip the attached guard")
-      assert(guard.staleTables == Seq(tbl + "_del"), guard.staleTables.toString)
-      val ex = intercept[IllegalStateException](guard.assertFresh())
-      assert(ex.getMessage.contains(tbl + "_del"), ex.getMessage)
+      assert(batch(Seq((105L, text(5)), (106L, text(6)), (107L, text(7)),
+        (115L, text(15))), 0) == Set(115L), "indexed texts must drop")
+      val plan = {
+        val buf = new java.io.ByteArrayOutputStream()
+        Console.withOut(buf)(q.explain())
+        buf.toString("UTF-8")
+      }
+      // the index scan and the operators above it, up to its join
+      val lines = plan.linesIterator.toIndexedSeq
+      def depth(l: String) = l.indexWhere(c => !" :+-".contains(c))
+      val scan = lines.indexWhere(_.contains(s"default.$tbl["))
+      val chain = Iterator.iterate(scan)(i =>
+          lines.lastIndexWhere(l => depth(l) < depth(lines(i)), i - 1))
+        .takeWhile(_ >= 0).map(lines).toSeq
+      val belowJoin = chain.takeWhile(!_.contains("SortMergeJoin"))
+      assert(scan >= 0 && lines(scan).contains("Bucketed: true"),
+        "the index scan must read the bucketed layout:\n" + plan)
+      assert(belowJoin.size < chain.size &&
+        !belowJoin.exists(_.contains("Exchange")),
+        "the index side must reach its join with no Exchange:\n" + plan)
+      delete(5L, 8L) // write #1 to _del
+      assert(batch(Seq((205L, text(5))), 1) == Set(205L), "delete #1")
+      delete(6L) // write #2
+      assert(batch(Seq((206L, text(6))), 2) == Set(206L), "delete #2")
+      delete(7L) // write #3
+      assert(batch(Seq((207L, text(7))), 3) == Set(207L), "delete #3")
+      // two appends to the base: a novel text, then a re-insert of
+      // deleted doc 8 (its text has not streamed since the delete)
+      Dedup.dedupIndexAppend(spark, tbl,
+        Seq((30L, text(30))).toDF("doc_id", "text"), "text", "doc_id",
+        tableBuckets = 4)
+      assert(batch(Seq((230L, text(30))), 4).isEmpty, "append #1")
+      Dedup.dedupIndexAppend(spark, tbl,
+        Seq((8L, text(8))).toDF("doc_id", "text"), "text", "doc_id",
+        tableBuckets = 4)
+      assert(batch(Seq((208L, text(8)), (209L, text(9)), (240L, text(40))),
+        5) == Set(240L), "the re-appended text must drop again")
     } finally {
-      guard.detach()
       q.stop(); q.awaitTermination()
       Seq(tbl, tbl + "_del").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
 
-  test("DEFAULT-ON envelope guard: a probe started with NO manual guard still warns and latches breached on the second post-start write") {
-    // r18 (r17 verdict item 1): before this round the enforcement only
-    // protected operators who read the StreamingOps scaladoc and
-    // captured a guard by hand — the exact failure mode the envelope
-    // itself had in r16, moved one level up. Now every index-joining
-    // probe constructor captures + attaches its own guard at definition
-    // time; RefreshEnvelope.guardOf keeps assertFresh() reachable.
-    import graft.ops.{Dedup, RefreshEnvelope}
-    val docs = spark.range(30).select(col("id").as("doc_id"),
-      concat(lit("autoguard stream fixture "), col("id")).as("text"))
-    val tbl = "graft_spec_envelope_auto"
-    Dedup.dedupIndexBuild(docs.filter(col("doc_id") < 10), "text",
-      "doc_id", tbl, tableBuckets = 4)
-    assert(RefreshEnvelope.guardOf(spark, tbl).isEmpty,
-      "no probe defined yet: no auto-guard")
+  test("linkIngestStream: three successive catalog deletes and a re-append each take effect in the next micro-batch") {
+    // Same property for the entity-resolution catalog: each withdrawn
+    // record stops linking from the next micro-batch on, however many
+    // deletes came before, and a re-appended record links again.
+    import graft.ops.Linkage
+    val cust = Tables.customer(spark, sf)
+      .select(col("c_custkey"), col("c_name")).cache()
+    val tbl = "graft_spec_link_listed_stream"
+    Linkage.editIndexBuild(cust, "c_custkey", "c_name",
+      tau = 2, tableName = tbl, tableBuckets = 4)
+    // one substitution inside record 10's name: links to it and to the
+    // catalog names within two edits of it
+    val probeStr = cust.filter(col("c_custkey") === 10)
+      .select(concat(lit("x"), substr(col("c_name"), lit(2), lit(17))))
+      .as[String].head()
     val ms = new MemoryStream[(Long, String, Timestamp)](84, spark, None)
-    // the ONLY envelope-related call is the probe constructor itself
-    val out = StreamingOps.dedupIngestStream(
-      ms.toDF().toDF("doc_id", "text", "ts"), "text", "doc_id", "ts",
-      "10 minutes", spark, tbl)
-    val guard = RefreshEnvelope.guardOf(spark, tbl).getOrElse(
-      fail("the probe constructor must have auto-captured a guard"))
-    val q = out.writeStream.format("memory").queryName("envelope_auto_out")
+    val out = StreamingOps.linkIngestStream(
+      ms.toDF().toDF("d_id", "d_s", "ts"), "d_id", "d_s", "ts",
+      watermark = "10 minutes", spark, tbl)
+    val q = out.writeStream.format("memory").queryName("link_listed_out")
       .outputMode("append").start()
-    def batch(ids: Seq[Long], m: Int): Unit = {
-      ms.addData(ids.map(i => (i, s"autoguard stream fixture $i", ts(m))))
+    // a fresh d_id per micro-batch: the (d_id, c_id) dedup is watermarked
+    def links(dId: Long, m: Int): Set[Long] = {
+      ms.addData(Seq((dId, probeStr, ts(m))))
       q.processAllAvailable()
-      org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
+      spark.table("link_listed_out").filter(col("d_id") === dId)
+        .select("c_id").as[Long].collect().toSet
+    }
+    def delete(id: Long): Unit =
+      Linkage.editIndexDelete(Seq(id).toDF("c_custkey"), "c_custkey", tbl)
+    try {
+      val all = links(9000L, 0)
+      val gone = all.toSeq.sorted.take(3)
+      assert(all.contains(10L) && all.size > 3,
+        s"the probe must link to more than three records: $all")
+      gone.zipWithIndex.foreach { case (id, i) =>
+        delete(id)
+        assert(links(9001L + i, i + 1) == all -- gone.take(i + 1),
+          s"delete #${i + 1} (record $id) must stop linking")
+      }
+      Linkage.editIndexAppend(cust.filter(col("c_custkey") === gone.head),
+        "c_custkey", "c_name", tbl, tableBuckets = 4)
+      assert(links(9010L, 5) == all -- gone.tail,
+        s"re-appended record ${gone.head} must link again")
+    } finally {
+      q.stop(); q.awaitTermination()
+      Seq(tbl, tbl + "_del", tbl + "_meta").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("bm25ScoreStream: two mid-stream appends each shift the next micro-batch's scores exactly as the batch twin's") {
+    // Every append writes the postings, `_docs` and `_stats`; the stream
+    // plans all three through listed reads, so the second append moves
+    // the scores too (with plain `spark.table` relations the second write
+    // per table would be invisible and batch 3 would score against the
+    // first append's statistics).
+    import graft.ops.TfIdf
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).cache()
+    val terms = Seq("spark", "merge", "window")
+    val tbl = "graft_spec_score_appends"
+    TfIdf.searchIndexBuild(docs.filter(col("doc_id") % 3 === 0),
+      "doc_id", "text", tbl, tableBuckets = 4)
+    val sent = docs.filter(col("doc_id") % 3 === 1).limit(40)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val ms = new MemoryStream[(Long, String, Timestamp)](85, spark, None)
+    val out = StreamingOps.bm25ScoreStream(
+      ms.toDF().toDF("doc_id", "text", "ts"), "doc_id", "text", "ts",
+      spark, tbl, terms)
+    val q = out.writeStream.format("memory").queryName("score_appends_out")
+      .outputMode("append").start()
+    // the same texts under ids shifted per micro-batch
+    def scores(shift: Long, m: Int): Map[Long, Double] = {
+      val batch = sent.map { case (id, t) => (id + shift, t) }
+      val twin = TfIdf.searchIndexScoreDocs(spark, tbl,
+          batch.toDF("doc_id", "text"), "doc_id", "text", terms)
+        .select("doc_id", "score").as[(Long, Double)].collect()
+        .map { case (id, s) => (id - shift) -> s }.toMap
+      ms.addData(batch.map { case (id, t) => (id, t, ts(m)) })
+      q.processAllAvailable()
+      val got = spark.table("score_appends_out")
+        .filter(col("doc_id") >= shift && col("doc_id") < shift + 100000L)
+        .select("doc_id", "score").as[(Long, Double)].collect()
+        .map { case (id, s) => (id - shift) -> s }.toMap
+      assert(got.nonEmpty && got.keySet == twin.keySet,
+        s"batch at shift $shift: ${got.keySet} vs ${twin.keySet}")
+      got.foreach { case (id, s) =>
+        assert(math.abs(s - twin(id)) < 1e-9,
+          s"doc $id at shift $shift: stream $s vs batch ${twin(id)}")
+      }
+      got
     }
     try {
-      batch(Seq(5L, 15L), 0)
-      assert(!guard.breached && guard.staleTables.isEmpty)
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 5L), "text")
-      batch(Seq(5L, 16L), 1)
-      assert(!guard.breached,
-        "first post-start write is inside the envelope")
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 6L), "text")
-      batch(Seq(6L, 17L), 2)
-      assert(guard.breached,
-        "unguarded-by-hand probe must still latch breached via its " +
-          "auto-captured guard")
-      assert(guard.staleTables == Seq(tbl + "_del"))
-      val ex = intercept[IllegalStateException](guard.assertFresh())
-      assert(ex.getMessage.contains(tbl + "_del"), ex.getMessage)
-      // redefinition replaces the registry entry with a FRESH envelope
-      // (latest wins) and detaches the old listener
-      StreamingOps.dedupIngestStream(
-        ms.toDF().toDF("doc_id", "text", "ts"), "text", "doc_id", "ts",
-        "10 minutes", spark, tbl)
-      val g2 = RefreshEnvelope.guardOf(spark, tbl).get
-      assert(g2 ne guard, "redefinition must re-capture")
-      assert(g2.staleTables.isEmpty && !g2.breached,
-        "the fresh guard's envelope starts at the new definition time")
-      assert(guard.breached, "the replaced guard object stays readable")
+      val s1 = scores(100000L, 0)
+      TfIdf.searchIndexAppend(docs.filter(col("doc_id") % 3 === 1),
+        "doc_id", "text", tbl, tableBuckets = 4)
+      val s2 = scores(200000L, 1)
+      TfIdf.searchIndexAppend(docs.filter(col("doc_id") % 3 === 2),
+        "doc_id", "text", tbl, tableBuckets = 4)
+      val s3 = scores(300000L, 2)
+      def moved(a: Map[Long, Double], b: Map[Long, Double]) =
+        a.exists { case (id, s) => b.get(id).exists(x => math.abs(x - s) > 1e-9) }
+      assert(moved(s1, s2), "append #1 must move the scores")
+      assert(moved(s2, s3), "append #2 must move the scores")
     } finally {
-      RefreshEnvelope.guardOf(spark, tbl).foreach(_.detach())
       q.stop(); q.awaitTermination()
-      Seq(tbl, tbl + "_del").foreach(t =>
+      Seq(tbl, tbl + "_del", tbl + "_docs", tbl + "_stats").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }

@@ -8,7 +8,13 @@ import org.apache.spark.sql.functions._
   * rewrite must not fire on look-alike folds it cannot prove.
   */
 class VectorKernelRuleSpec extends SparkSpec {
-  import graft.plans.VectorKernelRule.ENABLED_CONF
+  /** Run `f` with the rule switched off through Spark's own optimizer
+    * exclusion list. */
+  private def ruleOff[T](f: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      graft.plans.VectorKernelRule.ruleName)
+    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 
   private lazy val emb = Tables.embeddings(spark, sf)
     .select(col("vec_id"), col("embedding")).cache()
@@ -31,17 +37,12 @@ class VectorKernelRuleSpec extends SparkSpec {
         cosineD(col("embedding"), reverse(col("embedding"))).as("c"))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val on = run()
-    spark.conf.set(ENABLED_CONF, "false")
-    val off = try run() finally spark.conf.set(ENABLED_CONF, "true")
+    val off = ruleOff(run())
     // exact double equality — the kernels promise the identical fold
     assert(on.sameElements(off), "kernel results must match the HOF bits")
-    val offPlan = {
-      spark.conf.set(ENABLED_CONF, "false")
-      try emb.select(dotD(col("embedding"), col("embedding")))
-        .queryExecution.executedPlan.toString
-      finally spark.conf.set(ENABLED_CONF, "true")
-    }
-    assert(!offPlan.contains("graft_dot"), "flag off must keep the HOF form")
+    val offPlan = ruleOff(emb.select(dotD(col("embedding"), col("embedding")))
+      .queryExecution.executedPlan.toString)
+    assert(!offPlan.contains("graft_dot"), "rule off must keep the HOF form")
   }
 
   test("null and length semantics preserved through the rewrite") {
@@ -85,8 +86,7 @@ class VectorKernelRuleSpec extends SparkSpec {
     def run(): Array[(Long, Double)] =
       q.collect().map(r => (r.getLong(0), r.getDouble(1)))
     val on = run()
-    spark.conf.set(ENABLED_CONF, "false")
-    val off = try run() finally spark.conf.set(ENABLED_CONF, "true")
+    val off = ruleOff(run())
     assert(on.sameElements(off), "graft_l2 must match the HOF bits exactly")
     // self-distance sanity: identical operands give exactly 0.0
     val selfMax = emb.select(l2sqD(col("embedding"), col("embedding")).as("z"))
@@ -132,13 +132,12 @@ class VectorKernelRuleSpec extends SparkSpec {
     // documented divergence (kernel ≡ try_divide): under ANSI the raw HOF
     // quotient ERRORS on a zero divisor; the kernel degrades to NULL so a
     // single degenerate vector cannot kill a full-corpus similarity job
-    spark.conf.set(ENABLED_CONF, "false")
-    try {
+    ruleOff {
       val off = intercept[Exception] { run() }
       def chain(t: Throwable): String =
         if (t == null) "" else t.getMessage + "|" + chain(t.getCause)
       assert(chain(off).contains("DIVIDE_BY_ZERO"),
         s"expected the ANSI divide-by-zero error, got: ${chain(off).take(300)}")
-    } finally spark.conf.set(ENABLED_CONF, "true")
+    }
   }
 }
