@@ -1,6 +1,11 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Bucketed-layout co-located joins — the 100 TB answer to "this join
@@ -312,15 +317,20 @@ object Bucketing {
   // latest-op-wins key log would resurrect them alongside the fresh
   // row (r15 ADVICE).
   //
-  // ONE READ PER BATCH CALL, A LISTED VIEW PER STREAM: a batch
+  // ONE DRIVER READ PER BATCH CALL, A LISTED VIEW PER STREAM: a batch
   // BM25 or IVFADC call (probe, append, delete, compact) reads `_del`
-  // — and BM25's `_stats` — ONCE on the driver ([[readLifecycle]]) and
-  // plans the rest of the call against that read: tombstones become a
-  // broadcast local side ([[liveViewAt]], no join at all when nothing is
+  // — and BM25's `_stats` — ONCE, in the calling thread and with no
+  // Spark job ([[readLifecycle]]: the files a `spark.table` scan would
+  // read, decoded by Spark's own parquet reader), and plans the rest of
+  // the call against that read: tombstones become a filter over a
+  // broadcast key map ([[liveViewAt]], no filter at all when nothing is
   // deleted), the generation and corpus sums become literals. Each
   // per-use aggregate of the same fact would be a Spark job of its own,
   // and on sub-second calls per-job coordination, not compute, is the
-  // latency. Streaming constructors (`TfIdf.searchScoreStream`,
+  // latency; so is the read job itself, and a broadcast local relation
+  // (a job too). [[currentGen]] is the same read's generation, so the
+  // appends and deletes of every family stamp rows without a job.
+  // Streaming constructors (`TfIdf.searchScoreStream`,
   // `Similarity.ivfPqMatchStream`, the Dedup and Linkage streams) keep
   // the table-backed [[liveView]]: its `_del` scan is listed every
   // micro-batch, so a delete that lands after the stream started still
@@ -335,12 +345,13 @@ object Bucketing {
   val GenCol = "_gen"
 
   /** Observed-metric name prefix for tombstone visibility: every
-    * [[liveView]] probe against a non-empty delete table reports its
-    * tombstoned-key count (`n_tombstoned_keys`) AND a `compact_advised`
-    * boolean (r17 — count ≥ [[compactThreshold]]), so an uncompacted
-    * delete set growing toward broadcast pain surfaces as an explicit
-    * "compact me" long before the SFs any oracle checks (the
-    * maxBucket-drop pattern). Absent == zero/false: AQE's
+    * [[liveView]] probe against a non-empty delete table, and every
+    * [[liveViewAt]] probe with tombstones ([[tombstoneGauge]]), reports
+    * its tombstoned-key count (`n_tombstoned_keys`) AND a
+    * `compact_advised` boolean (r17 — count ≥ [[compactThreshold]]), so
+    * an uncompacted delete set growing toward broadcast pain surfaces
+    * as an explicit "compact me" long before the SFs any oracle checks
+    * (the maxBucket-drop pattern). Absent == zero/false: AQE's
     * empty-relation propagation prunes the observe node with the empty
     * broadcast side. Bench aggregates per query. */
   val TombstoneMetricPrefix = "graft_tombstone_keys/"
@@ -378,15 +389,11 @@ object Bucketing {
     df.withColumn(GenCol, org.apache.spark.sql.functions.lit(gen))
 
   /** The index's current generation = latest delete sequence in its
-    * `_del` table (0 when nothing was ever deleted). One tiny aggregate
-    * over the small-by-contract delete table; index APPENDS read it to
-    * stamp their rows. */
-  def currentGen(spark: SparkSession, tableName: String): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, max}
-    if (!spark.catalog.tableExists(tableName + "_del")) 0L
-    else spark.table(tableName + "_del")
-      .agg(coalesce(max("seq"), lit(0L))).first().getLong(0)
-  }
+    * `_del` table (0 when nothing was ever deleted), from the driver-side
+    * [[readLifecycle]] read: no Spark job. Index APPENDS read it to stamp
+    * their rows, deletes to claim the next sequence. */
+  def currentGen(spark: SparkSession, tableName: String): Long =
+    readLifecycle(spark, tableName, withStats = false).gen
 
   /** What a BATCH call knows about a tombstoned index's small side
     * tables, from ONE driver read ([[readLifecycle]]): the generation
@@ -400,97 +407,129 @@ object Bucketing {
       totalDl: Long)
 
   /** Read `<table>_del` (and, with `withStats`, `<table>_stats`) once,
-    * as ONE single-stage job with no aggregate — a union of the raw rows
-    * collected to the driver, where the generation, tombstone map,
-    * bookkeeping log and corpus sums are derived (see "one read per
-    * batch call" above). The corpus sums use `Math.addExact`, so an
-    * overflow throws as an ANSI `sum` would. Both tables are small by
-    * contract (fold `_del` with [[tombstoneCompact]]; `_stats` holds one
-    * row per lifecycle op). */
+    * in the calling thread and without a Spark job: the files a
+    * `spark.table` scan would read, decoded by Spark's own parquet reader
+    * ([[org.apache.spark.sql.graftshim.ListedTable.onDriver]], which
+    * decodes each committed file once and keeps its rows), folded
+    * into the generation, tombstone map, bookkeeping log and corpus sums
+    * (see "one read per batch call" above). The corpus sums use
+    * `Math.addExact`, so an overflow throws as an ANSI `sum` would. A
+    * `_stats` table persisted before the bookkeeping columns reads them
+    * as 0 (additive rows, see `TfIdf.ensureStatsSchema`); a NULL
+    * `n_docs` or `total_dl` is skipped, as SQL `sum` skips it. A file
+    * that cannot be decoded, or a NULL or non-integral `seq`/`del_sig`,
+    * fails the call here, on the driver, naming the table. Both tables
+    * are small by contract (fold `_del` with [[tombstoneCompact]];
+    * `_stats` holds one row per lifecycle op). */
   def readLifecycle(spark: SparkSession, tableName: String,
       withStats: Boolean): Lifecycle = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val delT = tableName + "_del"
-    val del = if (spark.catalog.tableExists(delT)) Some(spark.table(delT))
-      else None
-    val keyField = del.map(_.schema.head)
-      .getOrElse(StructField("key", LongType))
-    val nul = lit(null).cast(LongType)
-    // one row shape for both sources: (_src, key, seq, n_docs,
-    // total_dl, del_sig); union'd scans stay one stage
-    val delRows = del.map(_.select(lit(0).as("_src"),
-      col(keyField.name).as("_k"), col("seq"), nul.as("_n"), nul.as("_t"),
-      nul.as("_s")))
-    val statsRows = if (!withStats) None else {
-      val st = spark.table(tableName + "_stats")
-      // a `_stats` table persisted before the bookkeeping columns holds
-      // additive rows only (seq = del_sig = 0, see TfIdf.ensureStatsSchema)
-      def orZero(c: String) =
-        if (st.columns.contains(c)) col(c).cast(LongType) else lit(0L)
-      Some(st.select(lit(1).as("_src"),
-        lit(null).cast(keyField.dataType).as("_k"), orZero("seq").as("seq"),
-        col("n_docs").cast(LongType).as("_n"),
-        col("total_dl").cast(LongType).as("_t"), orZero("del_sig").as("_s")))
+    import org.apache.spark.sql.graftshim.ListedTable
+    def long(t: String, c: String, v: Any): Long = v match {
+      case l: Long => l
+      case i: Int => i.toLong
+      case s: Short => s.toLong
+      case b: Byte => b.toLong
+      case null => throw new IllegalStateException(s"$t: NULL $c")
+      case o => throw new IllegalStateException(
+        s"$t: $c holds a ${o.getClass.getSimpleName}, not an integer")
     }
-    val rows = (delRows.toSeq ++ statsRows).reduceOption(_.unionByName(_))
-      .map(_.collect()).getOrElse(Array.empty[Row])
+    val delT = tableName + "_del"
     var gen = 0L
+    val tomb = scala.collection.mutable.HashMap.empty[Any, Long]
+    val keyField = if (!ListedTable.exists(spark, delT)) StructField("key", LongType)
+      else {
+        val del = ListedTable.onDriver(spark, delT)
+        val seqAt = del.schema.fieldIndex("seq")
+        del.rows.foreach { r =>
+          val seq = long(delT, "seq", r.get(seqAt))
+          gen = math.max(gen, seq)
+          val k = r.get(0)
+          if (tomb.get(k).forall(_ < seq)) tomb(k) = seq
+        }
+        del.schema.head
+      }
     var nDocs = 0L
     var totalDl = 0L
-    val tomb = scala.collection.mutable.HashMap.empty[Any, Long]
     val book = Array.newBuilder[(Long, Long)]
-    rows.foreach { r =>
-      val seq = r.getLong(2)
-      if (r.getInt(0) == 0) {
-        gen = math.max(gen, seq)
-        val k = r.get(1)
-        if (tomb.get(k).forall(_ < seq)) tomb(k) = seq
-      } else {
-        book += ((seq, r.getLong(5)))
-        // a NULL sum input is skipped, as SQL sum skips it
-        if (!r.isNullAt(3)) nDocs = Math.addExact(nDocs, r.getLong(3))
-        if (!r.isNullAt(4)) totalDl = Math.addExact(totalDl, r.getLong(4))
+    if (withStats) {
+      val statsT = tableName + "_stats"
+      val st = ListedTable.onDriver(spark, statsT)
+      def at(c: String) = Some(st.schema.fieldNames.indexOf(c)).filter(_ >= 0)
+      val (n, t, seq, sig) = (st.schema.fieldIndex("n_docs"),
+        st.schema.fieldIndex("total_dl"), at("seq"), at("del_sig"))
+      // a legacy `_stats` table (no bookkeeping columns) holds additive
+      // rows only: seq = del_sig = 0
+      def orZero(i: Option[Int], c: String, r: Row) =
+        i.fold(0L)(j => long(statsT, c, r.get(j)))
+      st.rows.foreach { r =>
+        book += ((orZero(seq, "seq", r), orZero(sig, "del_sig", r)))
+        if (!r.isNullAt(n))
+          nDocs = Math.addExact(nDocs, long(statsT, "n_docs", r.get(n)))
+        if (!r.isNullAt(t))
+          totalDl = Math.addExact(totalDl, long(statsT, "total_dl", r.get(t)))
       }
     }
     Lifecycle(gen, tomb.toMap, keyField, book.result(), nDocs, totalDl)
   }
 
-  /** [[liveViewOf]] against the tombstones of one [[readLifecycle]] read:
-    * the same liveness rule and observed gauge, with the delete side a
-    * broadcast LOCAL relation (explicit `Row` + `StructType`, no encoder
-    * derivation on the serving path) — no `_del` scan or aggregate at
-    * execution — and no join at all when the index has no tombstones.
-    * For BATCH calls only: a streaming query must keep the table-backed
-    * [[liveView]], whose `_del` scan is listed per micro-batch, or it
-    * would never see a delete issued after it started. */
+  /** The LIVE rows of `base` under the tombstones of one [[readLifecycle]]
+    * read: a filter over (key, [[GenCol]]) that looks the key up in the
+    * read's tombstone map (the [[liveView]] rule: a row survives iff its
+    * key is not tombstoned, or its generation is at least the key's
+    * latest delete sequence). The map reaches executors as a
+    * `SparkContext.broadcast` variable, which starts no job, and sits in
+    * the plan as a referenced object, so task binaries and generated code
+    * stay the same size and text at any key count. An index with no
+    * tombstones gets no filter at all. Pair it with [[tombstoneGauge]] on
+    * the probe's result. For BATCH calls only: a streaming query must
+    * keep the table-backed [[liveView]], whose `_del` scan is listed per
+    * micro-batch, or it would never see a delete issued after it
+    * started. */
   def liveViewAt(base: DataFrame, lc: Lifecycle, keyCol: String): DataFrame =
     if (lc.tombstones.isEmpty) base.drop(GenCol)
     else {
-      val rows = new java.util.ArrayList[Row](lc.tombstones.size)
-      lc.tombstones.foreach { case (k, s) => rows.add(Row(k, s)) }
-      suppressDeleted(base, base.sparkSession.createDataFrame(rows,
-        StructType(Seq(lc.keyField.copy(name = keyCol),
-          StructField("_del_seq", LongType, nullable = false)))), keyCol)
+      import org.apache.spark.sql.GraftShims
+      import org.apache.spark.sql.catalyst.analysis.{TypeCoercion, UnresolvedAttribute}
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      // keys compare in the wider of the two key types, as the join
+      // keys of an equi-join would (an Int index key against Long
+      // tombstones must still match)
+      val (baseT, delT) = (base.schema(keyCol).dataType, lc.keyField.dataType)
+      val kt = TypeCoercion.findWiderTypeForTwo(baseT, delT).getOrElse(
+        throw new IllegalArgumentException(s"liveViewAt: key column " +
+          s"$keyCol is $baseT, the tombstone keys are $delT"))
+      val toCatalyst = GraftShims.toCatalyst(delT)
+      val toKey: Any => Any =
+        if (kt == delT) toCatalyst
+        else k => Cast(Literal(toCatalyst(k), delT), kt).eval()
+      val seqs = new java.util.HashMap[Any, java.lang.Long](
+        lc.tombstones.size * 2)
+      lc.tombstones.foreach { case (k, s) => seqs.put(toKey(k), s) }
+      val key = UnresolvedAttribute.quoted(keyCol)
+      val gen = if (base.columns.contains(GenCol)) UnresolvedAttribute(GenCol)
+        else Literal(0L)
+      base.filter(GraftShims.column(TombstoneLive(
+          if (kt == baseT) key else Cast(key, kt), gen,
+          base.sparkSession.sparkContext.broadcast(seqs))))
+        .drop(GenCol)
     }
 
-  /** The liveness rule shared by [[liveViewOf]] and [[liveViewAt]]:
-    * `del` holds one (key, `_del_seq`) row per tombstoned key; it gets
-    * the [[TombstoneMetricPrefix]] gauge and is broadcast-left-joined,
-    * and a base row survives iff its generation is at least its key's
-    * latest delete sequence. */
-  private def suppressDeleted(base: DataFrame, del: DataFrame,
-      keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
-    val spark = base.sparkSession
-    val observed = del.observe(
-      TombstoneMetricPrefix + tombObsId.incrementAndGet(),
-      count(lit(1)).as("n_tombstoned_keys"),
-      (count(lit(1)) >= compactThreshold(spark)).as("compact_advised"))
-    val gen = if (base.columns.contains(GenCol)) col(GenCol) else lit(0L)
-    base.join(broadcast(observed), Seq(keyCol), "left")
-      .filter(col("_del_seq").isNull || gen >= col("_del_seq"))
-      .drop("_del_seq").drop(GenCol)
-  }
+  /** The [[TombstoneMetricPrefix]] gauge of a [[liveViewAt]] probe: an
+    * `observe` of the read's tombstoned-key count (known on the driver)
+    * on the probe's own result, so the metric costs no job and blocks no
+    * filter pushdown into the index scan. No gauge when nothing is
+    * deleted (absent == zero, as for [[liveView]]). */
+  def tombstoneGauge(df: DataFrame, lc: Lifecycle): DataFrame =
+    if (lc.tombstones.isEmpty) df
+    else gauge(df, org.apache.spark.sql.functions.lit(lc.tombstones.size.toLong))
+
+  /** Observe the [[TombstoneMetricPrefix]] columns of tombstoned-key
+    * count `n`, under a name unique to this call. */
+  private def gauge(df: DataFrame,
+      n: org.apache.spark.sql.Column): DataFrame =
+    df.observe(TombstoneMetricPrefix + tombObsId.incrementAndGet(),
+      n.as("n_tombstoned_keys"),
+      (n >= compactThreshold(df.sparkSession)).as("compact_advised"))
 
   /** Create an EMPTY tombstone table alongside a fresh index build.
     * Always materializing it (rather than creating lazily on the first
@@ -592,10 +631,16 @@ object Bucketing {
     * same tombstones. */
   def liveViewOf(base: DataFrame, spark: SparkSession, delTable: String,
       keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.max
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max}
     if (!spark.catalog.tableExists(delTable)) base.drop(GenCol)
-    else suppressDeleted(base, listedTable(spark, delTable)
-      .groupBy(keyCol).agg(max("seq").as("_del_seq")), keyCol)
+    else {
+      val del = gauge(listedTable(spark, delTable)
+        .groupBy(keyCol).agg(max("seq").as("_del_seq")), count(lit(1)))
+      val gen = if (base.columns.contains(GenCol)) col(GenCol) else lit(0L)
+      base.join(broadcast(del), Seq(keyCol), "left")
+        .filter(col("_del_seq").isNull || gen >= col("_del_seq"))
+        .drop("_del_seq").drop(GenCol)
+    }
   }
 
   /** `spark.table(name)` for the static side of a stream: the same V1
@@ -710,8 +755,8 @@ object Bucketing {
       .exists(s => stagedProtocol(spark, tableName + "__compact" + s).isDefined)
     if (!pendingRollForward &&
       !spark.catalog.tableExists(tableName + "_del")) return None
-    val keys = if (!spark.catalog.tableExists(tableName + "_del")) 0L
-      else spark.table(tableName + "_del").select(keyCol).distinct().count()
+    val keys = readLifecycle(spark, tableName, withStats = false)
+      .tombstones.size.toLong
     if (keys < compactThreshold(spark) && !pendingRollForward) None
     else {
       val family = Seq("", "_del", "_docs", "_stats", "_meta")
@@ -759,4 +804,54 @@ object Bucketing {
     spark.table(s"${prefix}_l")
       .join(spark.table(s"${prefix}_r"), key)
   }
+}
+
+/** graft_live_at(key, gen): [[Bucketing.liveViewAt]]'s liveness test
+  * against a broadcast key → latest-delete-sequence map of Catalyst key
+  * values. A NULL key is live (a join on it would match no tombstone); a
+  * tombstoned key is live iff its generation is non-NULL and at least
+  * the key's sequence. Generated code references this object rather
+  * than inlining the map, so it is the same text for any tombstone set,
+  * and the task binary carries only the broadcast handle. */
+private[ops] final case class TombstoneLive(key: Expression, gen: Expression,
+    seqs: Broadcast[java.util.HashMap[Any, java.lang.Long]])
+    extends BinaryExpression with Predicate {
+  override def left: Expression = key
+  override def right: Expression = gen
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_live_at"
+  override def toString: String = s"$prettyName($key, $gen)"
+
+  def live(k: Any, genIsNull: Boolean, g: Long): Boolean = {
+    val s = seqs.value.get(k)
+    s == null || (!genIsNull && g >= s)
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val k = key.eval(input)
+    k == null || {
+      val g = gen.eval(input)
+      live(k, g == null, if (g == null) 0L else g.asInstanceOf[Long])
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("liveAt", this, getClass.getName)
+    val k = key.genCode(ctx)
+    val g = gen.genCode(ctx)
+    val boxed = if (CodeGenerator.isPrimitiveType(key.dataType))
+        s"${CodeGenerator.boxedType(key.dataType)}.valueOf(${k.value})"
+      else k.value.toString
+    ev.copy(code = code"""
+      ${k.code}
+      ${g.code}
+      boolean ${ev.value} = ${k.isNull} ||
+        $self.live($boxed, ${g.isNull}, ${g.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): TombstoneLive =
+    copy(key = newLeft, gen = newRight)
 }

@@ -515,14 +515,7 @@ object Similarity {
       .withColumn("_tab", adcL2TablesOf(
         residualCol(col("_qv"), col("cell"), coarseCents), codebooks))
       .drop("_qv")
-    val scored = liveIvfPqBatch(spark, tableName)
-      .join(q.hint("shuffle_merge"), "cell")
-      .withColumn("dist_adc", adcL2Dist(codebooks.length, "pq_code"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("dist_adc").asc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "n_id", "dist_adc")
+    liveIvfPqTopK(spark, tableName, q, codebooks.length, k)
   }
 
   /** Exhaustive residual-ADC top-k — [[ivfPqResidualProbe]]'s recall
@@ -634,25 +627,28 @@ object Similarity {
     val q = queries.select(col(idCol).as("q_id"),
       adcL2Tables(vecCol, codebooks).as("_tab"),
       explode(coarseProbeCells(col(vecCol), coarseCents, nprobe)).as("cell"))
-    val scored = liveIvfPqBatch(spark, tableName)
-      .join(q.hint("shuffle_merge"), "cell")
-      .withColumn("dist_adc", adcL2Dist(codebooks.length, "pq_code"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("dist_adc").asc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "n_id", "dist_adc")
+    liveIvfPqTopK(spark, tableName, q, codebooks.length, k)
   }
 
-  /** The live code rows for ONE batch probe: tombstones from a single
-    * [[Bucketing.readLifecycle]] read of `_del`, applied as a broadcast
-    * local side — or not at all when nothing is deleted, so an index
-    * without deletes plans no join and no `_del` stage. Streams keep the
-    * table-backed [[liveIvfPqIndex]]. */
-  private def liveIvfPqBatch(spark: SparkSession,
-      tableName: String): DataFrame =
-    Bucketing.liveViewAt(spark.table(tableName),
-      Bucketing.readLifecycle(spark, tableName, withStats = false), "n_id")
+  /** The top-k of ONE batch probe: the query side `q` (q_id, cell,
+    * `_tab`) joined on cell to the live code rows, ranked by ADC distance
+    * over `m` subspaces. Tombstones come from a single driver-side
+    * [[Bucketing.readLifecycle]] read of `_del`, applied as a filter on
+    * the code rows — or not at all when nothing is deleted — with the
+    * tombstone gauge on the result. Streams keep the table-backed
+    * [[liveIvfPqIndex]]. */
+  private def liveIvfPqTopK(spark: SparkSession, tableName: String,
+      q: DataFrame, m: Int, k: Int): DataFrame = {
+    val lc = Bucketing.readLifecycle(spark, tableName, withStats = false)
+    val scored = Bucketing.liveViewAt(spark.table(tableName), lc, "n_id")
+      .join(q.hint("shuffle_merge"), "cell")
+      .withColumn("dist_adc", adcL2Dist(m, "pq_code"))
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("dist_adc").asc, col("n_id"))
+    Bucketing.tombstoneGauge(scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select("q_id", "rnk", "n_id", "dist_adc"), lc)
+  }
 
   /** Append a new corpus batch to an [[ivfPqIndexBuild]] table — encode
     * with the SAME codebooks/centroids, write delta-sized (the

@@ -204,7 +204,16 @@ object TfIdf {
   /** [[searchIndexAppend]] with a crash-injection point — package-
     * visible so LifecycleRecoverySpec can replay every partial-append
     * state. `failAfter` = persisted steps allowed before the injected
-    * crash: 1 = pending marker only, 2 = + postings, 3 = + `_docs`. */
+    * crash: 1 = pending marker only, 2 = + postings, 3 = + `_docs`.
+    *
+    * Four jobs on a first attempt: the lifecycle read is a driver read
+    * ([[Bucketing.readLifecycle]]), the batch's (doc_id, dl) rows are
+    * collected in ONE job and folded on the driver ([[appendBatch]]:
+    * distinct-id count, gen-salted digest, row count, `dl` sum), the
+    * `_docs` rows are written from that local relation, and the
+    * postings, `_docs` and `_stats` writes are a job each. The postings
+    * re-run the batch's termCounts pass rather than persist it: a
+    * persisted batch cost an AQE table-cache stage of its own. */
   private[graft] def appendImpl(newDocs: DataFrame, idCol: String,
       textCol: String, tableName: String, tableBuckets: Int,
       failAfter: Int): Unit = {
@@ -218,10 +227,9 @@ object TfIdf {
     val lc = Bucketing.readLifecycle(spark, tableName, withStats = true)
     val gen = lc.gen
     val book = lc.book
-    // ONE termCounts pass over the batch (r18 optimization — the batch
-    // digest, postings, `_docs`, and `_stats` appends each re-scanned
-    // and re-tokenized it before): the per-doc (doc_id, dl, _tc)
-    // projection is persisted once and everything derives from it.
+    // the per-doc (doc_id, dl, _tc) projection of the batch; its
+    // (doc_id, dl) rows come to the driver in ONE job, and the batch
+    // identity, the stats row and the `_docs` rows all derive from them
     val perDoc = Transforms.materialized(
         newDocs.select(col(idCol), col(textCol)), "_tc",
         termCounts(col(textCol)))
@@ -229,30 +237,11 @@ object TfIdf {
         aggregate(col("_tc"), lit(0L), (a, p) => a + p.getField("cnt"))
           .as("dl"),
         col("_tc"))
-      .persist()
-    try {
-    // batch identity AND the stats row in ONE global aggregate:
-    // distinct-id count + order-free gen-salted digest (0 remaps to 1 —
-    // 0 is the legacy-additive-row stamp and must stay unclaimable;
-    // collisions are at the xxhash64 level, the same accepted risk as
-    // the delete's digest), row count and dl sum. The digest folds the
-    // DISTINCT id set (collect_set + a NULL-id flag: a repeated id
-    // must not XOR itself away), in the final aggregate's projection on
-    // the executor — one shuffle, and the set never reaches the driver
-    def h(id: Column) = xxhash64(id, lit(gen))
-    val batch = perDoc
-      .agg(count(lit(1)).as("_rows"), coalesce(sum("dl"), lit(0L)).as("_dl"),
-        collect_set(col("doc_id")).as("_ids"),
-        coalesce(max(col("doc_id").isNull), lit(false)).as("_null"))
-      .select(
-        (size(col("_ids")) + col("_null").cast("int")).cast("long"),
-        aggregate(col("_ids"),
-          when(col("_null"), h(lit(null).cast("long"))).otherwise(lit(0L)),
-          (acc, id) => acc.bitwiseXOR(h(id))),
-        col("_rows"), col("_dl"))
-      .first()
-    if (batch.getLong(0) == 0L) return // empty batch: nothing to append
-    val digest = { val d = batch.getLong(1); if (d == 0L) 1L else d }
+    val docsOf = perDoc.select("doc_id", "dl")
+    val rows = docsOf.collect()
+    val batch = appendBatch(rows, gen)
+    if (batch.ids == 0L) return // empty batch: nothing to append
+    val digest = batch.digest
     def completedRow(d: Long) = book.exists(p => p._1 == 0L && p._2 == d)
     if (completedRow(digest)) {
       // a finished append's retry: idempotent no-op (clear a marker a
@@ -302,11 +291,10 @@ object TfIdf {
             col(Bucketing.GenCol) === gen)
           .limit(1).count() > 0
       }
-      val minId = perDoc
-        .agg(min(col("doc_id"))).first().getLong(0)
-      landedDocs = spark.table(tableName + "_docs")
-        .filter(col("doc_id") === minId && col(Bucketing.GenCol) === gen)
-        .limit(1).count() > 0
+      landedDocs = batch.minId.exists(minId =>
+        spark.table(tableName + "_docs")
+          .filter(col("doc_id") === minId && col(Bucketing.GenCol) === gen)
+          .limit(1).count() > 0)
     }
     hook(1)
     if (!landedPostings)
@@ -314,14 +302,45 @@ object TfIdf {
         tableName, "term", tableBuckets)
     hook(2)
     if (!landedDocs)
-      Bucketing.appendTable(Bucketing.withGen(
-          perDoc.select(col("doc_id"), col("dl")), gen),
+      Bucketing.appendTable(Bucketing.withGen(spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), docsOf.schema), gen),
         tableName + "_docs")
     hook(3)
-    appendStatsRow(spark, tableName, batch.getLong(2), batch.getLong(3),
-      0L, digest)
+    appendStatsRow(spark, tableName, batch.rows, batch.dl, 0L, digest)
     clearAppendMarker(spark, tableName)
-    } finally perDoc.unpersist()
+  }
+
+  /** What an append learns about its batch from the batch's collected
+    * (doc_id, dl) rows: the distinct-id count (a NULL id counts once),
+    * the order-free gen-salted digest, the row count, the `dl` sum
+    * (NULLs skipped, overflow throws as an ANSI `sum` would) and the
+    * least non-NULL id. */
+  private[graft] final case class AppendBatch(ids: Long, digest: Long,
+      rows: Long, dl: Long, minId: Option[Long])
+
+  /** Fold a batch's (doc_id, dl) rows on the driver. The digest is the
+    * XOR of `xxhash64(doc_id, gen)` over the DISTINCT ids (a repeated id
+    * must not XOR itself away), evaluated with the kernel and seed
+    * Spark's `xxhash64` uses: each argument is hashed with the previous
+    * hash as its seed, starting from 42, and a NULL argument leaves the
+    * hash unchanged. So a pending marker written by an executor-side
+    * `xxhash64(doc_id, lit(gen))` fold of the same batch matches on
+    * retry. 0 remaps to 1: 0 is the legacy-additive-row stamp and must
+    * stay unclaimable; collisions are at the xxhash64 level, the same
+    * accepted risk as the delete's digest. */
+  private[graft] def appendBatch(rows: Array[Row], gen: Long): AppendBatch = {
+    val ids = scala.collection.mutable.HashSet.empty[Any]
+    var dl = 0L
+    rows.foreach { r =>
+      ids += (if (r.isNullAt(0)) null else r.getLong(0))
+      if (!r.isNullAt(1)) dl = Math.addExact(dl, r.getLong(1))
+    }
+    val d = ids.foldLeft(0L) { (acc, id) => acc ^ (id match {
+      case l: Long => XXH64.hashLong(gen, XXH64.hashLong(l, 42L))
+      case _ => XXH64.hashLong(gen, 42L)
+    }) }
+    AppendBatch(ids.size.toLong, if (d == 0L) 1L else d, rows.length.toLong,
+      dl, ids.collect { case l: Long => l }.minOption)
   }
 
   /** Warehouse path of the pending-append marker file — a FILE beside
@@ -667,11 +686,14 @@ object TfIdf {
     * is never touched at probe time.
     *
     * The call reads the index's `_stats` and `_del` rows ONCE, on the
-    * driver ([[Bucketing.readLifecycle]]), and plans against that read:
-    * N and avgdl become literals, tombstones a broadcast local side. The
-    * returned DataFrame therefore belongs to the index state at call
-    * time — call the probe again after a maintenance write rather than
-    * re-running an older DataFrame. */
+    * driver ([[Bucketing.readLifecycle]], no Spark job), and plans
+    * against that read: N and avgdl become literals, tombstones a filter
+    * over the matched postings ([[Bucketing.liveViewAt]]), and the
+    * tombstone gauge an `observe` on the result. A probe plus top-k
+    * collect is two jobs: the scan+window stage and the result
+    * (IndexCallJobsSpec). The returned DataFrame belongs to the index
+    * state at call time — call the probe again after a maintenance write
+    * rather than re-running an older DataFrame. */
   def searchIndexProbe(spark: SparkSession, tableName: String,
       queryTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
@@ -684,18 +706,20 @@ object TfIdf {
     val avgdl = lc.totalDl.toDouble / lc.nDocs.toDouble
     // df_t per term over the live matched postings: a window on the
     // term-bucketed scan, whose hash partitioning by term it reuses —
-    // no shuffle, no broadcast back
-    val postings = Bucketing.liveViewAt(spark.table(tableName), lc, "doc_id")
-      .filter(col("term").isin(queryTerms: _*))
+    // no shuffle, no broadcast back. The term filter goes below the
+    // tombstone filter, so a row meets the map lookup only if it matches
+    val postings = Bucketing.liveViewAt(
+        spark.table(tableName).filter(col("term").isin(queryTerms: _*)),
+        lc, "doc_id")
       .withColumn("df_t", count(lit(1)).over(Window.partitionBy("term")))
     val idf = log(lit(1.0) +
       (lit(n) - col("df_t") + 0.5) / (col("df_t") + 0.5))
-    postings
+    Bucketing.tombstoneGauge(postings
       .withColumn("_s", idf * col("cnt").cast("double") * (lit(k1) + 1.0) /
         (col("cnt").cast("double") + lit(k1) *
           (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
       .groupBy("doc_id")
-      .agg(sum("_s").as("score"), count(lit(1)).as("n_terms"))
+      .agg(sum("_s").as("score"), count(lit(1)).as("n_terms")), lc)
   }
 
   /** The 1-row static side for [[searchIndexScoreDocs]] /

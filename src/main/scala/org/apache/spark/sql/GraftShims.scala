@@ -4,15 +4,16 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge into `private[sql]` surface the public API does not expose:
   * constructing a DataFrame from a hand-built LogicalPlan (the entry
   * point every custom logical operator needs — Spark's own DSL does the
   * same via `Dataset.ofRows`), a Column from a hand-built expression
   * (a literal whose type is given, not derived by reflection), an IN
-  * over a driver-side value set as ONE `InSet` node, and a DataFrame over
-  * Catalyst rows a source decodes itself. Kept to these
+  * over a driver-side value set as ONE `InSet` node, a DataFrame over
+  * Catalyst rows a source decodes itself, and driver values as Catalyst
+  * values. Kept to these
   * calls; everything else in the engine goes through the public API. */
 object GraftShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -31,4 +32,9 @@ object GraftShims {
     * walks. `values` are Catalyst values of `c`'s type. */
   def inSet(c: Column, values: Set[Any]): Column =
     column(InSet(classic.ExpressionUtils.expression(c), values))
+
+  /** A driver value of type `dt` as the Catalyst value an expression
+    * evaluated over a `dt` column sees (e.g. `String` to `UTF8String`). */
+  def toCatalyst(dt: DataType): Any => Any =
+    catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
 }

@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.ops.{Similarity, TfIdf}
-import org.apache.spark.graftbus.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -12,32 +8,20 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Spark jobs per BATCH index call. Each BM25 / IVFADC call reads its
-  * index's `_del` and `_stats` rows once ([[graft.ops.Bucketing.readLifecycle]])
-  * and plans the rest against that read, instead of one
-  * aggregate-and-broadcast job per use of the same fact. On the
+  * index's `_del` and `_stats` files once, on the driver and without a
+  * job ([[graft.ops.Bucketing.readLifecycle]]), and plans the rest
+  * against that read: tombstones are a filter over a broadcast variable
+  * (no job), the append folds its batch stats from one collect. On the
   * sub-second calls these indexes serve, each job is fixed
   * coordination cost, so the counts are pinned exactly: a change that
   * adds a job to a call fails here, not only as a slower benchmark.
-  * Every index carries a non-empty `_del`, so the tombstone side is
+  * Every index carries a non-empty `_del`, so the tombstone filter is
   * planned, as in steady-state serving. */
 class IndexCallJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val bm25 = "graft_spec_jobs_bm25"
   private val ivf = "graft_spec_jobs_ivfpq"
   private val terms = Seq("spark", "merge", "window")
-
-  /** Spark jobs started by `body`, counted on the listener bus. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerDrain.drain(sc)
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try { body; ListenerDrain.drain(sc); n.get() }
-    finally sc.removeSparkListener(l)
-  }
 
   private def drop(names: String*): Unit = names.foreach { n =>
     Seq("", "_del", "_docs", "_stats").foreach(s =>
@@ -60,7 +44,7 @@ class IndexCallJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       bm25Index()
       val jobs = jobsOf(TfIdf.searchIndexProbe(spark, bm25, terms)
         .orderBy(desc("score"), asc("doc_id")).limit(10).collect())
-      assert(jobs == 4, s"BM25 probe ran $jobs jobs")
+      assert(jobs == 2, s"BM25 probe ran $jobs jobs")
     } finally drop(bm25)
   }
 
@@ -90,16 +74,15 @@ class IndexCallJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       bm25Index()
       val batch = docs.filter(col("doc_id") === 1L || col("doc_id") === 3L)
-      // read, one batch aggregate (the batch's cache, one shuffle stage,
-      // result), postings, `_docs` and `_stats` writes
+      // the batch's (doc_id, dl) collect, postings, `_docs` and `_stats`
+      // writes
       val append = jobsOf(TfIdf.searchIndexAppend(batch, "doc_id", "text",
         bm25, tableBuckets = 4))
-      assert(append == 7, s"BM25 append ran $append jobs")
-      // read, id collect, `_docs` rows of the ids, `_stats` and `_del`
-      // writes
+      assert(append == 4, s"BM25 append ran $append jobs")
+      // id collect, `_docs` rows of the ids, `_stats` and `_del` writes
       val delete = jobsOf(TfIdf.searchIndexDelete(spark, bm25,
         batch.select("doc_id"), "doc_id"))
-      assert(delete == 5, s"BM25 delete ran $delete jobs")
+      assert(delete == 4, s"BM25 delete ran $delete jobs")
     } finally drop(bm25)
   }
 
@@ -114,16 +97,18 @@ class IndexCallJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       Similarity.ivfPqIndexBuild(e, "vec_id", "embedding", cb, coarse, ivf,
         tableBuckets = 4)
-      val clean = probe()
-      assert(!clean.queryExecution.optimizedPlan.toString.contains("_del_seq"),
-        "an index without tombstones must plan no tombstone join")
-      // read, query-side cell shuffle, top-k window shuffle, result
+      def filtered(p: org.apache.spark.sql.DataFrame) =
+        p.queryExecution.optimizedPlan.toString.contains("graft_live_at")
+      assert(!filtered(probe()),
+        "an index without tombstones must plan no tombstone filter")
+      // query-side cell shuffle, top-k window shuffle, result
       val empty = jobsOf(probe().collect())
-      assert(empty == 4, s"IVFADC probe (empty _del) ran $empty jobs")
+      assert(empty == 3, s"IVFADC probe (empty _del) ran $empty jobs")
       Similarity.ivfPqIndexDelete(e.filter(col("vec_id") < 3), "vec_id", ivf)
-      // + the tombstone broadcast
+      // the tombstone filter adds no job
+      assert(filtered(probe()))
       val deleted = jobsOf(probe().collect())
-      assert(deleted == 5, s"IVFADC probe (non-empty _del) ran $deleted jobs")
+      assert(deleted == 3, s"IVFADC probe (non-empty _del) ran $deleted jobs")
     } finally drop(ivf)
   }
 }

@@ -601,8 +601,8 @@ class LayoutBucketingSpec extends SparkSpec {
       org.apache.spark.graftbus.ListenerDrain.drain(spark.sparkContext)
       assert(seen.asScala.toSeq == Seq((3L, true)),
         s"at threshold 3 the probe must advise compaction: ${seen}")
-      // the BM25 probe applies tombstones from its one lifecycle read,
-      // as a broadcast local side: the same gauge, once per probe
+      // the BM25 probe applies tombstones from its driver-side lifecycle
+      // read as a filter, and observes the same gauge, once per probe
       spark.conf.unset(Bucketing.CompactThresholdConf)
       TfIdf.searchIndexBuild(docs, "doc_id", "text", bm, tableBuckets = 4)
       TfIdf.searchIndexDelete(spark, bm,
